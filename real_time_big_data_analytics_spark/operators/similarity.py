@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ..functions.arrays import cosine_similarity, dot, l2_norm
 from ..functions.numeric import round2
+from ..sources.binio import murmur3_x86_32, to_int32
 from ..sources.tables import load_table, spread
 
 # Per-process staging token (optimization r12, VERDICT r11 what's-wrong
@@ -1767,20 +1768,7 @@ def _murmur3_int32(x: int, seed: int = 42) -> int:
     """Spark's ``hash()`` of one INT column: Murmur3_x86_32 over the
     4-byte value with Spark's seed 42 — a driver-side twin used only
     to PLAN partition counts (validated against F.hash in tests)."""
-    mask = 0xFFFFFFFF
-    k = (x & mask) * 0xCC9E2D51 & mask
-    k = ((k << 15) | (k >> 17)) & mask
-    k = k * 0x1B873593 & mask
-    h = (seed ^ k) & mask
-    h = ((h << 13) | (h >> 19)) & mask
-    h = (h * 5 + 0xE6546B64) & mask
-    h ^= 4  # total byte length
-    h ^= h >> 16
-    h = h * 0x85EBCA6B & mask
-    h ^= h >> 13
-    h = h * 0xC2B2AE35 & mask
-    h ^= h >> 16
-    return h - (1 << 32) if h >= (1 << 31) else h
+    return to_int32(murmur3_x86_32((x & 0xFFFFFFFF).to_bytes(4, "little"), seed))
 
 
 def _spread_parts(n_groups: int) -> int:

@@ -1504,9 +1504,9 @@ def _kafka_wire_snappy_roundtrip(spark, sf_dir):
     the xerial magic and also accepts bare raw-snappy payloads
     (librdkafka's shape, pinned in tests/test_kafka_wire.py). One
     batch mis-inflated anywhere in the cycle and the aggregate
-    diverges from the parquet oracle. The codec itself is
-    foreign-validated against pyarrow's C++ snappy in
-    tests/test_snappy_codec.py; lz4/zstd stay loudly refused."""
+    diverges from the parquet oracle. The block codec is pyarrow's
+    C++ snappy behind ``sources/snappy_codec.py``'s xerial framing;
+    lz4/zstd ride their own pyarrow frame codecs."""
     from pyspark.sql import functions as F
 
     from .sources.pyds import read_events_via_kafka_wire_snappy
@@ -4506,8 +4506,8 @@ register(
 def _avro_ocf_snappy(spark, sf_dir):
     """Round 11: the events table staged as Avro container files with
     the spec's ``snappy`` codec — raw snappy block + BE CRC-32 of the
-    plain bytes per block, produced by the pure-Python codec in
-    ``sources/snappy_codec.py`` (refused loudly through r10; the
+    plain bytes per block, produced by ``sources/snappy_codec.py``
+    over pyarrow's C++ snappy (refused loudly through r10; the
     dominant codec on real Avro files) — and scanned back through the
     same ``avro_ocf`` DataSource path as the deflate twin. The oracle
     recomputes from parquet, so a mis-inflated block, a CRC accepted

@@ -17,8 +17,8 @@ Implemented subset (everything the events/documents tables need):
   data blocks of ``(count, byte-size, payload, sync)``;
 - codecs — the spec's COMPLETE required+optional set as of round 11:
   ``null``, ``deflate`` (raw DEFLATE, zlib windowBits=-15), ``snappy``
-  (raw snappy block + BE CRC-32 of the plain bytes, pure-Python
-  ``snappy_codec``), ``bzip2`` (stdlib ``bz2``), ``xz`` (stdlib
+  (raw snappy block + BE CRC-32 of the plain bytes, ``snappy_codec``
+  over pyarrow's C++ snappy), ``bzip2`` (stdlib ``bz2``), ``xz`` (stdlib
   ``lzma``, .xz container) and ``zstandard`` (zstd frame via
   pyarrow's C++ codec — baked-in dependency, loud refusal if absent);
 - binary encoding: zigzag-varint longs/ints, IEEE-754 LE
@@ -50,6 +50,7 @@ import struct
 import zlib
 
 from . import snappy_codec
+from .binio import read_zigzag_from, write_zigzag
 
 
 def _zstd_compress(data: bytes) -> bytes:
@@ -80,40 +81,11 @@ SYNC = bytes(range(16))  # fixed marker: deterministic output files
 # -- primitive binary encoding ----------------------------------------
 
 
-def zigzag_encode(n: int) -> int:
-    return (n << 1) ^ (n >> 63) if n >= 0 else ((-n) << 1) - 1
-
-
-def zigzag_decode(u: int) -> int:
-    return (u >> 1) ^ -(u & 1)
-
-
 def write_long(buf: io.BytesIO, n: int) -> None:
-    u = (n << 1) ^ (n >> 63)  # arithmetic shift keeps sign bits
-    u &= (1 << 70) - 1  # bound the two's-complement image
-    while True:
-        b = u & 0x7F
-        u >>= 7
-        if u:
-            buf.write(bytes((b | 0x80,)))
-        else:
-            buf.write(bytes((b,)))
-            return
+    buf.write(write_zigzag(n))
 
 
-def read_long(buf: io.BytesIO) -> int:
-    shift = u = 0
-    while True:
-        raw = buf.read(1)
-        if not raw:
-            raise EOFError("varint truncated")
-        b = raw[0]
-        u |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return (u >> 1) ^ -(u & 1)
-        shift += 7
-        if shift > 70:
-            raise ValueError("varint too long")
+read_long = read_zigzag_from
 
 
 def write_bytes(buf: io.BytesIO, b: bytes) -> None:

@@ -15,7 +15,7 @@ API, Search/Scroll APIs) and the public routing formula:
 - **murmur3_x86_32** — the hash behind ES document routing
   (``shard = floorMod(murmur3(_id), number_of_shards)`` — Austin
   Appleby's public MurmurHash3, the variant ES's
-  ``Murmur3HashFunction`` uses with seed 0), table-free stdlib;
+  ``Murmur3HashFunction`` uses with seed 0), shared from ``binio``;
 - **``_bulk`` NDJSON protocol** — ``{"index": {"_index", "_id"}}``
   action lines + source-doc lines, trailing-newline mandatory, per-item
   status in the response, last-write-wins on ``_id`` (which is exactly
@@ -54,53 +54,13 @@ import threading
 import uuid
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
-# ------------------------------------------------------------ murmur3
-
-
-def murmur3_x86_32(data: bytes, seed: int = 0) -> int:
-    """MurmurHash3 x86 32-bit (public domain reference by Austin
-    Appleby) — returns the UNSIGNED 32-bit hash. ES routes documents
-    with the signed interpretation: see :func:`es_shard`."""
-    c1, c2 = 0xCC9E2D51, 0x1B873593
-    h = seed & 0xFFFFFFFF
-    n = len(data)
-    rounded = n - (n % 4)
-    for i in range(0, rounded, 4):
-        k = int.from_bytes(data[i : i + 4], "little")
-        k = (k * c1) & 0xFFFFFFFF
-        k = ((k << 15) | (k >> 17)) & 0xFFFFFFFF
-        k = (k * c2) & 0xFFFFFFFF
-        h ^= k
-        h = ((h << 13) | (h >> 19)) & 0xFFFFFFFF
-        h = (h * 5 + 0xE6546B64) & 0xFFFFFFFF
-    k = 0
-    tail = data[rounded:]
-    if len(tail) >= 3:
-        k ^= tail[2] << 16
-    if len(tail) >= 2:
-        k ^= tail[1] << 8
-    if tail:
-        k ^= tail[0]
-        k = (k * c1) & 0xFFFFFFFF
-        k = ((k << 15) | (k >> 17)) & 0xFFFFFFFF
-        k = (k * c2) & 0xFFFFFFFF
-        h ^= k
-    h ^= n
-    h ^= h >> 16
-    h = (h * 0x85EBCA6B) & 0xFFFFFFFF
-    h ^= h >> 13
-    h = (h * 0xC2B2AE35) & 0xFFFFFFFF
-    h ^= h >> 16
-    return h
+from .binio import murmur3_x86_32, to_int32
 
 
 def es_shard(doc_id: str, n_shards: int) -> int:
     """ES document routing: ``floorMod(signed32(murmur3(id)), n)`` —
     Python's ``%`` on the signed value IS floorMod."""
-    h = murmur3_x86_32(doc_id.encode("utf-8"))
-    if h >= 1 << 31:
-        h -= 1 << 32
-    return h % n_shards
+    return to_int32(murmur3_x86_32(doc_id.encode("utf-8"))) % n_shards
 
 
 def _match_query(q: dict, doc: dict) -> bool:

@@ -60,6 +60,8 @@ import socketserver
 import struct
 import threading
 
+from .binio import read_zigzag, write_zigzag
+
 # ---------------------------------------------------------------- CRC32C
 
 _CRC32C_TABLE: list[int] = []
@@ -85,55 +87,17 @@ def crc32c(data: bytes) -> int:
     return crc ^ 0xFFFFFFFF
 
 
-# ---------------------------------------------------------------- varints
-
-
-def _zigzag(n: int) -> int:
-    return (n << 1) ^ (n >> 63)
-
-
-def _unzigzag(n: int) -> int:
-    return (n >> 1) ^ -(n & 1)
-
-
-def write_varint(n: int) -> bytes:
-    """Zigzag varint (Kafka record framing)."""
-    u = _zigzag(n) & 0xFFFFFFFFFFFFFFFF
-    out = bytearray()
-    while True:
-        b = u & 0x7F
-        u >>= 7
-        if u:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
-def read_varint(buf: bytes, pos: int) -> tuple[int, int]:
-    shift = u = 0
-    while True:
-        b = buf[pos]
-        pos += 1
-        u |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return _unzigzag(u), pos
-        shift += 7
-        if shift > 70:
-            raise ValueError("varint too long")
-
-
 # ------------------------------------------------------- RecordBatch v2
 
 
 # RecordBatch v2 attributes bits 0-2: the compression codec
-# (kafka.apache.org/protocol "attributes"). none/gzip/snappy are
-# implemented in-engine (snappy via the pure-Python codec in
-# ``snappy_codec``, round 11 — the dominant codec on real topics).
-# lz4 (3, the KIP-57 LZ4 FRAME format) and zstd (4, the zstd frame)
-# ride pyarrow's C++ codecs — a baked-in dependency, probed at call
-# time — closing the full five-codec matrix; where pyarrow lacks the
-# codec the refusal stays loud, never a mis-decode.
+# (kafka.apache.org/protocol "attributes"). gzip is stdlib; snappy (2,
+# the dominant codec on real topics) is pyarrow's C++ block codec
+# behind the xerial framing in ``snappy_codec``; lz4 (3, the KIP-57
+# LZ4 FRAME format) and zstd (4, the zstd frame) ride pyarrow's C++
+# frame codecs — a baked-in dependency, probed at call time — closing
+# the full five-codec matrix; where pyarrow lacks the codec the
+# refusal stays loud, never a mis-decode.
 CODEC_NONE, CODEC_GZIP, CODEC_SNAPPY, CODEC_LZ4, CODEC_ZSTD = 0, 1, 2, 3, 4
 _CODEC_MASK = 0x07
 
@@ -198,15 +162,15 @@ def encode_record_batch(
     for i, (key, value) in enumerate(records):
         rec = bytearray()
         rec += b"\x00"  # record attributes
-        rec += write_varint(0)  # timestampDelta
-        rec += write_varint(i)  # offsetDelta
+        rec += write_zigzag(0)  # timestampDelta
+        rec += write_zigzag(i)  # offsetDelta
         if key is None:
-            rec += write_varint(-1)
+            rec += write_zigzag(-1)
         else:
-            rec += write_varint(len(key)) + key
-        rec += write_varint(len(value)) + value
-        rec += write_varint(0)  # headers
-        body += write_varint(len(rec)) + rec
+            rec += write_zigzag(len(key)) + key
+        rec += write_zigzag(len(value)) + value
+        rec += write_zigzag(0)  # headers
+        body += write_zigzag(len(rec)) + rec
 
     payload = bytes(body)
     if codec == CODEC_GZIP:
@@ -218,8 +182,7 @@ def encode_record_batch(
     elif codec == CODEC_SNAPPY:
         from . import snappy_codec
 
-        # the xerial stream framing the Java client writes (and the
-        # deterministic own-compressor keeps batches byte-reproducible)
+        # the xerial stream framing the Java client writes
         payload = snappy_codec.xerial_frame(payload)
     elif codec == CODEC_LZ4:
         payload = _pa_frame_compress(payload, "lz4")
@@ -300,22 +263,22 @@ def decode_record_batch(buf: bytes) -> list[tuple[bytes | None, bytes]]:
         raise ValueError(f"unsupported codec {codec} in batch attributes")
     pos, out = 40, []
     for _ in range(count):
-        rec_len, pos = read_varint(after_crc, pos)
+        rec_len, pos = read_zigzag(after_crc, pos)
         end = pos + rec_len
         pos += 1  # record attributes
-        _, pos = read_varint(after_crc, pos)  # timestampDelta
-        _, pos = read_varint(after_crc, pos)  # offsetDelta
-        klen, pos = read_varint(after_crc, pos)
+        _, pos = read_zigzag(after_crc, pos)  # timestampDelta
+        _, pos = read_zigzag(after_crc, pos)  # offsetDelta
+        klen, pos = read_zigzag(after_crc, pos)
         key = None if klen < 0 else bytes(after_crc[pos : pos + klen])
         pos += max(klen, 0)
-        vlen, pos = read_varint(after_crc, pos)
+        vlen, pos = read_zigzag(after_crc, pos)
         value = bytes(after_crc[pos : pos + vlen])
         pos += vlen
-        nh, pos = read_varint(after_crc, pos)
+        nh, pos = read_zigzag(after_crc, pos)
         for _ in range(nh):
-            hk, pos = read_varint(after_crc, pos)
+            hk, pos = read_zigzag(after_crc, pos)
             pos += max(hk, 0)
-            hv, pos = read_varint(after_crc, pos)
+            hv, pos = read_zigzag(after_crc, pos)
             pos += max(hv, 0)
         if pos != end:
             raise ValueError("record length mismatch")

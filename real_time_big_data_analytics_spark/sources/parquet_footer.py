@@ -39,6 +39,8 @@ from __future__ import annotations
 import io
 import struct
 
+from .binio import read_uvarint_from, read_zigzag_from
+
 MAGIC = b"PAR1"
 
 # thrift compact type nibbles
@@ -78,48 +80,29 @@ ENCODINGS = {
 }
 
 
-def _read_uvarint(buf: io.BytesIO) -> int:
-    shift = u = 0
-    while True:
-        raw = buf.read(1)
-        if not raw:
-            raise EOFError("varint truncated")
-        b = raw[0]
-        u |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return u
-        shift += 7
-        if shift > 70:
-            raise ValueError("varint too long")
-
-
-def _zigzag(u: int) -> int:
-    return (u >> 1) ^ -(u & 1)
-
-
 def _read_value(buf: io.BytesIO, ftype: int):
     if ftype in (_TRUE, _FALSE):
         return ftype == _TRUE
     if ftype == _BYTE:
         return struct.unpack("b", buf.read(1))[0]
     if ftype in (_I16, _I32, _I64):
-        return _zigzag(_read_uvarint(buf))
+        return read_zigzag_from(buf)
     if ftype == _DOUBLE:
         return struct.unpack("<d", buf.read(8))[0]
     if ftype == _BINARY:
-        n = _read_uvarint(buf)
+        n = read_uvarint_from(buf)
         return buf.read(n)
     if ftype in (_LIST, _SET):
         head = buf.read(1)[0]
         size = head >> 4
         etype = head & 0x0F
         if size == 15:
-            size = _read_uvarint(buf)
+            size = read_uvarint_from(buf)
         if etype in (_TRUE, _FALSE):  # bools in lists are one byte each
             return [buf.read(1)[0] == 1 for _ in range(size)]
         return [_read_value(buf, etype) for _ in range(size)]
     if ftype == _MAP:
-        size = _read_uvarint(buf)
+        size = read_uvarint_from(buf)
         if size == 0:
             return {}
         kv = buf.read(1)[0]
@@ -156,7 +139,7 @@ def _read_struct(buf: io.BytesIO) -> dict[int, object]:
             return out
         delta = head[0] >> 4
         ftype = head[0] & 0x0F
-        fid = fid + delta if delta else _zigzag(_read_uvarint(buf))
+        fid = fid + delta if delta else read_zigzag_from(buf)
         out[fid] = _read_value(buf, ftype)
 
 

@@ -16,6 +16,7 @@ import struct
 
 import pytest
 
+from real_time_big_data_analytics_spark.sources import binio
 from real_time_big_data_analytics_spark.sources import kafka_wire as KW
 
 
@@ -36,8 +37,8 @@ def test_crc32c_known_vectors():
 
 def test_varint_zigzag_roundtrip():
     for n in (0, 1, -1, 63, -64, 64, 300, -300, 2**31 - 1, -(2**31), 2**40):
-        buf = KW.write_varint(n)
-        got, pos = KW.read_varint(buf, 0)
+        buf = binio.write_zigzag(n)
+        got, pos = binio.read_zigzag(buf, 0)
         assert (got, pos) == (n, len(buf)), n
 
 
@@ -216,6 +217,29 @@ def test_broker_refuses_corrupt_batch(broker):
     _partition, err = struct.unpack(">ih", presp[off : off + 6])
     assert err == 2  # CORRUPT_MESSAGE
     assert KW.parse_fetch_record_sets(fresp)[("bad", 0)] == b""
+
+
+def _truncated_records_batch() -> bytes:
+    """A batch whose records section lost its last byte (the final
+    record's header-count varint) but whose CRC-32C and length were
+    recomputed over what is left — only the record walk can catch it."""
+    batch = KW.encode_record_batch([(b"k", b"v1"), (b"k", b"v2")])
+    after_crc = batch[21:-1]
+    tail = struct.pack(">ibI", -1, 2, KW.crc32c(after_crc)) + after_crc
+    return struct.pack(">qi", 0, len(tail)) + tail
+
+
+def test_truncated_records_section_is_corrupt_message(broker):
+    """Decoding raises the designed ValueError (not IndexError), so the
+    broker answers CORRUPT_MESSAGE (2) and appends nothing."""
+    batch = _truncated_records_batch()
+    with pytest.raises(ValueError, match="truncated"):
+        KW.decode_record_batch(batch)
+    _, addr = broker
+    with _connect(addr) as sock:
+        err, _off = _produce_one(sock, 1, "trunc", 0, batch)
+        assert err == 2  # CORRUPT_MESSAGE
+        assert _fetch_all(sock, 2, "trunc", 0) == []
 
 
 def test_unsupported_version_is_signalled(broker):

@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from real_time_big_data_analytics_spark.operators import joins, relational
@@ -74,15 +75,32 @@ def test_udaf_and_udtf_stay_arrow_vectorized(spark, sf_dir):
     assert "ArrowEvalPythonUDTF" in udtf_plan, udtf_plan
 
 
-def test_no_rowwise_python_or_cartesian_anywhere(spark, sf_dir):
+@pytest.fixture(scope="module")
+def batch_plans(spark, sf_dir) -> dict[str, tuple[str, str]]:
+    """Every batch query built ONCE for the two sweeps below (each
+    build runs the query's eager jobs): name -> (formatted explain,
+    executed-plan string). Only the strings are kept."""
+    from real_time_big_data_analytics_spark.registry import all_queries
+
+    plans = {}
+    for name, q in sorted(all_queries().items()):
+        if "streaming" in q.tags:  # replay runners, not lazy plans
+            continue
+        df = q.fn(spark, sf_dir)
+        plans[name] = (
+            explain_str(df),
+            df._jdf.queryExecution().executedPlan().toString(),
+        )
+    return plans
+
+
+def test_no_rowwise_python_or_cartesian_anywhere(batch_plans):
     """Sweep every batch query's physical plan: no row-at-a-time
     Python UDFs (BatchEvalPython) and no unintended cartesian products.
     The brute-force kNN family intentionally scans query × corpus via
     a broadcast nested-loop (that IS the operator); everything else
     must be hash/sort/broadcast joins and codegen'd expressions.
     """
-    from real_time_big_data_analytics_spark.registry import all_queries
-
     # knn: query × corpus broadcast scan IS the operator;
     # a5 / theta / histogram: 1-row scalar broadcasts (max(ts),
     # sketch blobs, min/max bounds);
@@ -154,10 +172,7 @@ def test_no_rowwise_python_or_cartesian_anywhere(spark, sf_dir):
         "m3_holdout_eval",
         "l7_group_split_audit",  # 1-row leakage flag broadcast
     }
-    for name, q in sorted(all_queries().items()):
-        if "streaming" in q.tags:  # replay runners, not lazy plans
-            continue
-        plan = explain_str(q.fn(spark, sf_dir))
+    for name, (plan, _) in batch_plans.items():
         assert "BatchEvalPython" not in plan, f"{name} uses row-wise Python"
         assert "CartesianProduct" not in plan, f"{name} has a cartesian product"
         if name not in NESTED_LOOP_OK:
@@ -190,7 +205,7 @@ def test_stream_anti_join_broadcasts_suppression_side(spark, sf_dir):
     assert "broadcast" in plan, plan
 
 
-def test_no_heavy_exprs_in_scan_filters(spark, sf_dir):
+def test_no_heavy_exprs_in_scan_filters(batch_plans):
     """Regression guard for the inferred-explode-predicate trap
     (SCALE.md): `explode` over an expensive computed array lets
     Catalyst infer a non-empty-array predicate that sinks below the
@@ -201,12 +216,7 @@ def test_no_heavy_exprs_in_scan_filters(spark, sf_dir):
     """
     import re
 
-    from real_time_big_data_analytics_spark.registry import all_queries
-
-    for name, q in sorted(all_queries().items()):
-        if "streaming" in q.tags:
-            continue
-        plan = q.fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+    for name, (_, plan) in batch_plans.items():
         for m in re.finditer(r"FileScan parquet [^\n]*DataFilters: \[([^\]]*)\]", plan):
             f = m.group(1)
             assert "transform(" not in f and "array_distinct(" not in f, (
