@@ -10,7 +10,6 @@ from __future__ import annotations
 import functools
 import os
 import sys
-import tempfile
 import zipfile
 from collections.abc import Callable
 
@@ -20,6 +19,7 @@ _REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, _REPO)
 
 from real_time_big_data_analytics_spark.registry import all_queries
+from real_time_big_data_analytics_spark.sources.staging import scratch_dir
 
 _FLAGSHIP = "flagship_windowed_analytics"
 _PKG = "real_time_big_data_analytics_spark"
@@ -51,7 +51,7 @@ def _ship_package(spark: SparkSession) -> None:
     if app_id in _shipped_contexts:
         return
     pkg_dir = os.path.join(_REPO, _PKG)
-    zpath = os.path.join(tempfile.mkdtemp(prefix="rtba_pkg_"), f"{_PKG}.zip")
+    zpath = os.path.join(scratch_dir("rtba_pkg_"), f"{_PKG}.zip")
     with zipfile.ZipFile(zpath, "w", zipfile.ZIP_DEFLATED) as zf:
         for root, _dirs, files in os.walk(pkg_dir):
             for fn in files:

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.numeric import round2
+from ..sources.staging import scratch_dir
 from ..sources.tables import load_table
 
 # Mid-range snapshot cut: events span 2024-01-01 .. 2024-01-30.
@@ -126,13 +127,11 @@ def gdpr_forget_audit(
     SQL-derivable, so the oracle checks the deletion itself, not just
     plumbing.
     """
-    import tempfile
-
     events = load_table(spark, sf_dir, "events")
     bucketed = events.withColumn(
         "user_bucket", (F.col("user_id") % n_buckets).cast("int")
     )
-    root = tempfile.mkdtemp(prefix="rtba_gdpr_")
+    root = scratch_dir("rtba_gdpr_")
     bucketed.write.mode("overwrite").partitionBy("user_bucket").parquet(root)
 
     # the delete: rewrite ONLY the forget bucket's partition

@@ -182,10 +182,14 @@ def sessionize_events(spark: SparkSession, sf_dir: str, gap_minutes: int = 30) -
     """
     events = load_table(spark, sf_dir, "events")
     by_user = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.col("ts").cast("long") - F.lag(F.col("ts").cast("long")).over(by_user)
+    # whole microseconds, like the oracle's epoch(ts): a cast to long
+    # floors each ts to the second and merges a 1800.5 s gap
+    gap_us = F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(by_user)
     with_flag = events.withColumn(
         "new_session",
-        F.when(gap.isNull() | (gap > gap_minutes * 60), F.lit(1)).otherwise(F.lit(0)),
+        F.when(
+            gap_us.isNull() | (gap_us > gap_minutes * 60 * 1_000_000), F.lit(1)
+        ).otherwise(F.lit(0)),
     )
     with_id = with_flag.withColumn(
         "session_id",

@@ -16,20 +16,8 @@ from pyspark.sql import functions as F
 from ..functions.arrays import cosine_similarity, dot, l2_norm
 from ..functions.numeric import round2
 from ..sources.binio import murmur3_x86_32, to_int32
+from ..sources.staging import scratch_dir, staged
 from ..sources.tables import load_table, spread
-
-# Per-process staging token (optimization r12, VERDICT r11 what's-wrong
-# #1): every persisted index staging dir under /tmp folds this into its
-# content tag, so an index staged by a PREVIOUS process (an earlier
-# bench/driver run against the same testdata fingerprint) is never
-# silently reused — each process pays its own build, exactly once
-# (the declared build-once/search-many lifecycle), and a warm /tmp can
-# no longer exclude the build cost from a fresh run's first sample.
-# A uuid, not the pid: pids recycle and a recycled pid plus a stale
-# /tmp dir would alias.
-import uuid as _uuid
-
-_PROC_STAGE_TOKEN = _uuid.uuid4().hex[:12]
 
 N_QUERIES = 5  # vec_id < 5 are the demo query vectors
 TOP_K = 10
@@ -259,27 +247,16 @@ def knn_ivf_indexed(
     touching all of them.
     """
     import os
-    import tempfile
 
     import numpy as np
 
     if index_dir is None:
-        # The cache key includes a fingerprint of the SOURCE file
-        # (mtime+size), not just the sf-dir name: the harness
-        # regenerates testdata between rounds under the same path, and
-        # an index built from the previous round's vectors would
-        # silently serve stale cells. A real deployment versions its
-        # index builds the same way.
-        src = os.path.join(sf_dir, "embeddings.parquet")
-        st = os.stat(src)
-        tag = (
-            f"{os.path.basename(os.path.normpath(sf_dir))}"
-            f"_{st.st_mtime_ns}_{st.st_size}_{_PROC_STAGE_TOKEN}"
+        index_dir = staged(
+            f"ivf_c{n_cells}",
+            os.path.join(sf_dir, "embeddings.parquet"),
+            lambda stage: ivf_index_write(spark, sf_dir, stage, n_cells=n_cells),
         )
-        index_dir = os.path.join(
-            tempfile.gettempdir(), "rtba_ivf_index", f"{tag}_c{n_cells}"
-        )
-    if not os.path.isdir(os.path.join(index_dir, "vectors")):
+    elif not os.path.isdir(os.path.join(index_dir, "vectors")):
         ivf_index_write(spark, sf_dir, index_dir, n_cells=n_cells)
 
     centers_rows = spark.read.parquet(f"{index_dir}/centroids").collect()
@@ -826,9 +803,7 @@ def ivf_index_append_audit(
     index refresh that touches ~batch-size bytes and one that
     rewrites the corpus. Output: per-cell base/appended counts.
     """
-    import tempfile
-
-    index_dir = tempfile.mkdtemp(prefix="rtba_ivf_append_")
+    index_dir = scratch_dir("rtba_ivf_append_")
     emb = spread(load_table(spark, sf_dir, "embeddings"))
     corpus = emb.withColumn(
         "cell", F.expr(_sign_cell_expr(bits=APPEND_BITS))
@@ -2133,36 +2108,17 @@ ORDER BY ef
 
 # --- HNSW persisted index: build once, search many (round 9) ----------
 
-_HNSW_INDEX_DIRS: dict[str, str] = {}
-
-
 def hnsw_index_write(spark: SparkSession, sf_dir: str) -> str:
     """Persist the per-shard HNSW graphs as a shard-partitioned
     parquet EDGE table — the index lifecycle step the IVF family has
     (``ivf_index_write``): build once, search many. Only the adjacency
     needs storing; node levels and the entry point are pure functions
     of the vector id (the deterministic level draw), so the index is
-    exactly (node_id, layer, neighbor_id) rows. Staged once per process per corpus
-    fingerprint (the _PROC_STAGE_TOKEN discipline) via build-in-scratch + atomic rename (the delta-stager
-    crash-idempotency discipline)."""
-    import hashlib
+    exactly (node_id, layer, neighbor_id) rows. Staged once per process
+    per corpus fingerprint (``staging.staged``)."""
     import os
-    import shutil
-    import tempfile
-    import uuid
 
-    st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
-    tag = hashlib.md5(
-        f"hnsw|{sf_dir}|{st.st_mtime_ns}|{st.st_size}|{_PROC_STAGE_TOKEN}".encode()
-    ).hexdigest()[:12]
-    if tag in _HNSW_INDEX_DIRS:
-        return _HNSW_INDEX_DIRS[tag]
-    index_dir = os.path.join(tempfile.gettempdir(), f"rtba_hnswidx_{tag}")
-    done = os.path.join(index_dir, "_staging_complete")
-    if not os.path.exists(done):
-        if os.path.exists(index_dir):
-            shutil.rmtree(index_dir)
-        stage = f"{index_dir}.staging-{uuid.uuid4().hex[:12]}"
+    def build(stage: str) -> None:
         emb = spread(load_table(spark, sf_dir, "embeddings"))
         corpus = emb.withColumn(
             "shard", (F.col("vec_id") % HNSW_SHARDS).cast("int")
@@ -2174,16 +2130,8 @@ def hnsw_index_write(spark: SparkSession, sf_dir: str) -> str:
             fn, "node_id bigint, layer int, neighbor_id bigint"
         ).withColumn("shard", (F.col("node_id") % HNSW_SHARDS).cast("int"))
         edges.write.partitionBy("shard").parquet(os.path.join(stage, "edges"))
-        with open(os.path.join(stage, "_staging_complete"), "w") as f:
-            f.write(tag)
-        try:
-            os.rename(stage, index_dir)
-        except OSError:
-            shutil.rmtree(stage, ignore_errors=True)
-            if not os.path.exists(done):
-                raise
-    _HNSW_INDEX_DIRS[tag] = index_dir
-    return index_dir
+
+    return staged("hnswidx", os.path.join(sf_dir, "embeddings.parquet"), build)
 
 
 def _hnsw_search_edges_fn(queries: list, k: int, ef: int, m: int):
@@ -2366,9 +2314,6 @@ def knn_hnsw_indexed_checked(
 # the corpus. Pinned by the bound-assertion pattern: every appended
 # node reachable from the entry point, degree bounds intact, and
 # serving recall over the UPDATED graph at the fresh-build floor.
-
-_HNSW_APPEND_DIRS: dict[str, str] = {}
-
 
 def _hnsw_insert_fn(m: int, ef_c: int):
     """Cogrouped insert body: one shard's vectors (base + new, flagged
@@ -2573,39 +2518,24 @@ def _hnsw_graph_stats_fn(m: int):
 
 
 def hnsw_append_stage(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the append lifecycle once per process per corpus fingerprint (the
-    delta-stager crash-idempotency discipline): persist the BASE
-    corpus's per-shard edges, then read them BACK from disk and run
-    the insert cogroup for the nightly batch, persisting the updated
-    graph as ``edges_v2`` — the full persisted-index round trip."""
-    import hashlib
+    """Stage the append lifecycle once per process per corpus
+    fingerprint (``staging.staged``): persist the BASE corpus's
+    per-shard edges, then read them BACK from disk and run the insert
+    cogroup for the nightly batch, persisting the updated graph as
+    ``edges_v2`` — the full persisted-index round trip."""
     import os
-    import shutil
-    import tempfile
-    import uuid
 
-    st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
-    tag = hashlib.md5(
-        f"hnswappend|{sf_dir}|{st.st_mtime_ns}|{st.st_size}|{_PROC_STAGE_TOKEN}".encode()
-    ).hexdigest()[:12]
-    if tag in _HNSW_APPEND_DIRS:
-        return _HNSW_APPEND_DIRS[tag]
-    index_dir = os.path.join(tempfile.gettempdir(), f"rtba_hnswapp_{tag}")
-    done = os.path.join(index_dir, "_staging_complete")
-    if not os.path.exists(done):
-        if os.path.exists(index_dir):
-            shutil.rmtree(index_dir)
-        stage = f"{index_dir}.staging-{uuid.uuid4().hex[:12]}"
+    def build(stage: str) -> None:
         emb = spread(load_table(spark, sf_dir, "embeddings"))
         corpus = emb.withColumn(
             "shard", (F.col("vec_id") % HNSW_SHARDS).cast("int")
         ).withColumn("is_new", F.col("vec_id") % 10 == 0)
         base = corpus.filter(~F.col("is_new"))
-        build = _hnsw_candidate_fn(
+        edges_fn = _hnsw_candidate_fn(
             [], 0, (), HNSW_M, HNSW_EF_CONSTRUCTION, emit="edges"
         )
         base_edges = _sharded(base).applyInPandas(
-            build, "node_id bigint, layer int, neighbor_id bigint"
+            edges_fn, "node_id bigint, layer int, neighbor_id bigint"
         ).withColumn("shard", (F.col("node_id") % HNSW_SHARDS).cast("int"))
         base_edges.write.partitionBy("shard").parquet(
             os.path.join(stage, "edges_base")
@@ -2621,16 +2551,8 @@ def hnsw_append_stage(spark: SparkSession, sf_dir: str) -> str:
         updated.write.partitionBy("shard").parquet(
             os.path.join(stage, "edges_v2")
         )
-        with open(os.path.join(stage, "_staging_complete"), "w") as f:
-            f.write(tag)
-        try:
-            os.rename(stage, index_dir)
-        except OSError:
-            shutil.rmtree(stage, ignore_errors=True)
-            if not os.path.exists(done):
-                raise
-    _HNSW_APPEND_DIRS[tag] = index_dir
-    return index_dir
+
+    return staged("hnswapp", os.path.join(sf_dir, "embeddings.parquet"), build)
 
 
 HNSW_APPEND_RECALL_FLOOR = 0.85  # the fresh-build serving floor
@@ -2741,7 +2663,6 @@ FROM embeddings
 # -- round 11: HNSW delete maintenance (tombstone -> compact) -----------
 
 HNSW_TOMBSTONE_COMPACT = 0.05  # compact a shard past this deleted fraction
-_HNSW_DELETE_DIRS: dict[str, str] = {}
 
 
 def _hnsw_search_excluding_fn(
@@ -2935,7 +2856,8 @@ def _hnsw_compact_fn(m: int):
 
 
 def hnsw_delete_stage(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the delete lifecycle once per process per corpus fingerprint:
+    """Stage the delete lifecycle once per process per corpus
+    fingerprint (``staging.staged``):
 
     - ``edges_base``: the full-corpus per-shard graphs, persisted;
     - ``tombstones_v1`` (``vec_id % 34 == 3``, ~2.9%/shard): BELOW the
@@ -2948,34 +2870,19 @@ def hnsw_delete_stage(spark: SparkSession, sf_dir: str) -> str:
       ``edges_compacted``; a below-threshold shard would keep its
       base edges (the per-shard decision is written to
       ``compaction.json``)."""
-    import hashlib
     import json as _json
     import os
-    import shutil
-    import tempfile
-    import uuid
 
-    st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
-    tag = hashlib.md5(
-        f"hnswdel|{sf_dir}|{st.st_mtime_ns}|{st.st_size}|{_PROC_STAGE_TOKEN}".encode()
-    ).hexdigest()[:12]
-    if tag in _HNSW_DELETE_DIRS:
-        return _HNSW_DELETE_DIRS[tag]
-    index_dir = os.path.join(tempfile.gettempdir(), f"rtba_hnswdel_{tag}")
-    done = os.path.join(index_dir, "_staging_complete")
-    if not os.path.exists(done):
-        if os.path.exists(index_dir):
-            shutil.rmtree(index_dir)
-        stage = f"{index_dir}.staging-{uuid.uuid4().hex[:12]}"
+    def build(stage: str) -> None:
         emb = spread(load_table(spark, sf_dir, "embeddings"))
         corpus = emb.withColumn(
             "shard", (F.col("vec_id") % HNSW_SHARDS).cast("int")
         )
-        build = _hnsw_candidate_fn(
+        edges_fn = _hnsw_candidate_fn(
             [], 0, (), HNSW_M, HNSW_EF_CONSTRUCTION, emit="edges"
         )
         base_edges = _sharded(corpus).applyInPandas(
-            build, "node_id bigint, layer int, neighbor_id bigint"
+            edges_fn, "node_id bigint, layer int, neighbor_id bigint"
         ).withColumn("shard", (F.col("node_id") % HNSW_SHARDS).cast("int"))
         base_edges.write.partitionBy("shard").parquet(
             os.path.join(stage, "edges_base")
@@ -3029,16 +2936,8 @@ def hnsw_delete_stage(spark: SparkSession, sf_dir: str) -> str:
         compacted.unionByName(kept).write.partitionBy("shard").parquet(
             os.path.join(stage, "edges_compacted")
         )
-        with open(os.path.join(stage, "_staging_complete"), "w") as f:
-            f.write(tag)
-        try:
-            os.rename(stage, index_dir)
-        except OSError:
-            shutil.rmtree(stage, ignore_errors=True)
-            if not os.path.exists(done):
-                raise
-    _HNSW_DELETE_DIRS[tag] = index_dir
-    return index_dir
+
+    return staged("hnswdel", os.path.join(sf_dir, "embeddings.parquet"), build)
 
 
 def hnsw_index_delete_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -22,6 +22,14 @@ from ..sources.tables import load_table, spread
 STOPWORDS = ("the", "a")
 
 
+def jaccard_prune_floor(threshold: float) -> Fraction:
+    """The smallest exact Jaccard a kept pair can have. Pairs are kept
+    on ``round2(J, 4) >= threshold``, and J = t - 1/20000 already
+    rounds up to t, so every lossless prune bound derives from that
+    rational, never from t itself."""
+    return Fraction(threshold).limit_denominator(10**6) - Fraction(1, 20000)
+
+
 def _words(col: str = "text"):
     return F.split(F.col(col), " ")
 
@@ -390,11 +398,10 @@ def ngram_jaccard_pairs(
     # the pair-generation lambda, so a pruned pair is never built,
     # exploded, or shuffled to the pair-grain aggregation — at sf0.1
     # that is 1.27M -> 469k candidate rows with the output edge set
-    # verified row-identical. Exact rational arithmetic (p/q bigints),
-    # the ppjoin_jaccard_pairs discipline: a float threshold constant
-    # could prune a pair sitting exactly at J = t.
-    frac = Fraction(threshold).limit_denominator(10**6)
-    tp, tq = frac.numerator, frac.denominator
+    # verified row-identical. Exact rational arithmetic (p/q bigints)
+    # on the rounding-aware floor, the ppjoin_jaccard_pairs discipline.
+    t_lo = jaccard_prune_floor(threshold)
+    tp, tq = t_lo.numerator, t_lo.denominator
     # array_sort on struct<doc_id,sz> orders by doc_id (first field),
     # so i<j expansion below guarantees a_id < b_id with no extra
     # comparison; slice() start is 1-based → i+2 skips self and priors.
@@ -1648,9 +1655,10 @@ def ppjoin_jaccard_pairs(
     # alpha 29). Same hazard hits ceil(t·|d|) (prefix one token short
     # for |d| a multiple of 5 at t=0.8) and min >= t·max (prunes the
     # tight 4/5-sized pair). All three now use bigint arithmetic on
-    # p/q, where integer-ceil(a/b) = (a + b - 1) DIV b.
-    frac = Fraction(threshold).limit_denominator(10**6)
-    tp, tq = frac.numerator, frac.denominator
+    # p/q, where integer-ceil(a/b) = (a + b - 1) DIV b. p/q is the
+    # rounding-aware floor t - 1/20000, not t (jaccard_prune_floor).
+    t_lo = jaccard_prune_floor(threshold)
+    tp, tq = t_lo.numerator, t_lo.denominator
     # Optimization r12 (guide §1.2#1, VERDICT r11 ask #2): the shingle
     # transform used to be evaluated THREE times — the token stream
     # plus both verification array sides re-derived it from raw text.

@@ -579,8 +579,8 @@ register(
     ),
     tags=("similarity", "knn", "ivf"),
 )
-# persisted-index variant: builds (once, idempotent) a cell-partitioned
-# parquet index under the system temp dir, probes read only n_probe
+# persisted-index variant: stages (once per process) a cell-partitioned
+# parquet index via sources.staging, probes read only n_probe
 # cell directories via static partition pruning (plan-pinned)
 register(
     "l3_knn_ivf_indexed",
@@ -1267,24 +1267,14 @@ register(
 )
 
 def _stage_docs_jsonl(spark, sf_dir) -> str:
-    """JSONL export of the documents subset, built once per sf_dir
-    under the system temp dir (idempotent, like the persisted IVF
-    index). The source file is fingerprinted too: the harness
-    regenerates testdata between rounds under the same path, and a
-    stale export would silently diverge from the oracle."""
-    import hashlib
+    """JSONL export of the documents subset, staged once per process
+    per documents fingerprint (``sources.staging.staged``)."""
     import os
-    import tempfile
 
     from .operators.text import load_table
+    from .sources.staging import staged
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    tag = hashlib.md5(
-        f"{sf_dir}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    out_dir = os.path.join(tempfile.gettempdir(), f"rtba_pyds_{tag}")
-    marker = os.path.join(out_dir, "_SUCCESS")
-    if not os.path.exists(marker):
+    def build(out_dir: str) -> None:
         (
             load_table(spark, sf_dir, "documents")
             .select("doc_id", "lang", "n_chars")
@@ -1292,7 +1282,8 @@ def _stage_docs_jsonl(spark, sf_dir) -> str:
             .write.mode("overwrite")
             .json(out_dir)
         )
-    return out_dir
+
+    return staged("pyds", os.path.join(sf_dir, "documents.parquet"), build)
 
 
 def _python_datasource_scan(spark, sf_dir):
@@ -1333,11 +1324,9 @@ def _python_datasource_write_roundtrip(spark, sf_dir):
     sources/pyds.py), then read it back through the matching reader
     and aggregate: the oracle recomputes from the original parquet, so
     a row lost or duplicated anywhere in the write→commit→read cycle
-    breaks the hash. Write lands in a per-sf temp dir (mode=overwrite
-    keeps the query idempotent)."""
-    import hashlib
+    breaks the hash. The write is staged once per process per
+    documents fingerprint (``sources.staging.staged``)."""
     import os
-    import tempfile
 
     from pyspark.sql import functions as F
 
@@ -1346,18 +1335,17 @@ def _python_datasource_write_roundtrip(spark, sf_dir):
         write_documents_via_python_datasource,
     )
     from .operators.text import load_table
+    from .sources.staging import staged
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    tag = hashlib.md5(
-        f"pydsw|{sf_dir}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    out_dir = os.path.join(tempfile.gettempdir(), f"rtba_pydsw_{tag}")
-    df = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "lang", "n_chars")
-        .repartition(4)
-    )
-    write_documents_via_python_datasource(spark, df, out_dir)
+    def build(out_dir: str) -> None:
+        df = (
+            load_table(spark, sf_dir, "documents")
+            .select("doc_id", "lang", "n_chars")
+            .repartition(4)
+        )
+        write_documents_via_python_datasource(spark, df, out_dir)
+
+    out_dir = staged("pydsw", os.path.join(sf_dir, "documents.parquet"), build)
     back = read_documents_via_python_datasource(spark, out_dir)
     return back.groupBy("lang").agg(
         F.count("*").alias("n_docs"),
@@ -1389,12 +1377,12 @@ def _python_datasource_stream(spark, sf_dir):
     stream equal the batch aggregate — the oracle checks the custom
     source's offset accounting end-to-end (a dropped or re-read shard
     changes the counts)."""
-    import tempfile
     import uuid
 
     from pyspark.sql import functions as F
 
     from .sources.pyds import stream_documents_via_python_datasource
+    from .sources.staging import scratch_dir
 
     stream = stream_documents_via_python_datasource(
         spark, _stage_docs_jsonl(spark, sf_dir)
@@ -1411,7 +1399,7 @@ def _python_datasource_stream(spark, sf_dir):
             agg.writeStream.outputMode("complete")
             .format("memory")
             .queryName(name)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="rtba_ckpt_pyds_"))
+            .option("checkpointLocation", scratch_dir("rtba_ckpt_pyds_"))
             .start()
         )
         try:
@@ -1760,12 +1748,12 @@ def _kafka_wire_stream(spark, sf_dir):
     complete-mode aggregate. Prefix consistency over the static topic
     makes the drained stream equal the batch aggregate; a dropped or
     re-read partition changes the counts."""
-    import tempfile
     import uuid
 
     from pyspark.sql import functions as F
 
     from .sources.pyds import stream_events_via_kafka_wire
+    from .sources.staging import scratch_dir
     from .streaming.runner import _stream_shuffle_partitions
 
     stream = stream_events_via_kafka_wire(spark, sf_dir)
@@ -1784,7 +1772,7 @@ def _kafka_wire_stream(spark, sf_dir):
             agg.writeStream.outputMode("complete")
             .format("memory")
             .queryName(name)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="rtba_ckpt_kwire_"))
+            .option("checkpointLocation", scratch_dir("rtba_ckpt_kwire_"))
             .start()
         )
         try:
@@ -3362,21 +3350,14 @@ register(
 
 
 def _stage_docs_orc(spark, sf_dir: str) -> str:
-    """Idempotent ORC staging of the documents table (same mtime-keyed
-    temp-dir discipline as _stage_docs_jsonl)."""
-    import hashlib
+    """ORC copy of the documents table, staged once per process per
+    documents fingerprint (``sources.staging.staged``)."""
     import os
-    import tempfile
 
     from .operators.text import load_table
+    from .sources.staging import staged
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    tag = hashlib.md5(
-        f"{sf_dir}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    out_dir = os.path.join(tempfile.gettempdir(), f"rtba_orc_{tag}")
-    marker = os.path.join(out_dir, "_SUCCESS")
-    if not os.path.exists(marker):
+    def build(out_dir: str) -> None:
         (
             load_table(spark, sf_dir, "documents")
             .select("doc_id", "lang", "source", "n_chars")
@@ -3384,7 +3365,8 @@ def _stage_docs_orc(spark, sf_dir: str) -> str:
             .write.mode("overwrite")
             .orc(out_dir)
         )
-    return out_dir
+
+    return staged("orc", os.path.join(sf_dir, "documents.parquet"), build)
 
 
 def _orc_roundtrip_stats(spark, sf_dir):
@@ -3857,22 +3839,17 @@ def _stage_docs_evolving(spark, sf_dir: str) -> str:
     """Idempotent two-batch parquet staging with an EVOLVED schema:
     batch 1 (even doc_id) writes (doc_id, lang, n_chars); batch 2
     (odd doc_id) adds the quality_tier column — the
-    append-with-new-column shape every long-lived lake table hits."""
-    import hashlib
+    append-with-new-column shape every long-lived lake table hits.
+    Staged once per process per documents fingerprint
+    (``sources.staging.staged``)."""
     import os
-    import tempfile
 
     from pyspark.sql import functions as F
 
     from .operators.text import load_table
+    from .sources.staging import staged
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    tag = hashlib.md5(
-        f"{sf_dir}|evolve|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    out_dir = os.path.join(tempfile.gettempdir(), f"rtba_evolve_{tag}")
-    marker = os.path.join(out_dir, "b2", "_SUCCESS")
-    if not os.path.exists(marker):
+    def build(out_dir: str) -> None:
         docs = load_table(spark, sf_dir, "documents")
         (
             docs.filter(F.col("doc_id") % 2 == 0)
@@ -3893,7 +3870,8 @@ def _stage_docs_evolving(spark, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(os.path.join(out_dir, "b2"))
         )
-    return out_dir
+
+    return staged("evolve", os.path.join(sf_dir, "documents.parquet"), build)
 
 
 def _schema_evolution_scan(spark, sf_dir):
@@ -4167,23 +4145,17 @@ def _stage_docs_jsonl_corrupt(spark, sf_dir) -> str:
     staging scales with the corpus (VERDICT r4 ask #5). A truncated
     JSON object prefix is always malformed (the closing brace is past
     the midpoint), so the injection rule stays exactly
-    ``doc_id % CORRUPT_EVERY == 0 → corrupt``.
+    ``doc_id % CORRUPT_EVERY == 0 → corrupt``. Staged once per
+    process per documents fingerprint (``sources.staging.staged``).
     """
-    import hashlib
     import os
-    import tempfile
 
     from pyspark.sql import functions as F
 
     from .operators.text import load_table
+    from .sources.staging import staged
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    tag = hashlib.md5(
-        f"{sf_dir}|corrupt-dist|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    out_dir = os.path.join(tempfile.gettempdir(), f"rtba_corrupt_{tag}")
-    marker = os.path.join(out_dir, "_SUCCESS")
-    if not os.path.exists(marker):
+    def build(out_dir: str) -> None:
         line = F.to_json(F.struct("doc_id", "lang", "n_chars"))
         mangled = F.when(
             F.col("doc_id") % CORRUPT_EVERY == 0,
@@ -4196,7 +4168,8 @@ def _stage_docs_jsonl_corrupt(spark, sf_dir) -> str:
             .write.mode("overwrite")
             .text(out_dir)
         )
-    return out_dir
+
+    return staged("corrupt", os.path.join(sf_dir, "documents.parquet"), build)
 
 
 def _corrupt_record_audit(spark, sf_dir):
@@ -4620,12 +4593,12 @@ def _avro_ocf_stream(spark, sf_dir):
     consistency over the static file set makes the drained stream
     equal the batch aggregate; a dropped or re-read file changes the
     counts."""
-    import tempfile
     import uuid
 
     from pyspark.sql import functions as F
 
     from .sources.pyds import stream_events_via_avro_ocf
+    from .sources.staging import scratch_dir
     from .streaming.runner import _stream_shuffle_partitions
 
     stream = stream_events_via_avro_ocf(spark, sf_dir, codec="deflate")
@@ -4642,7 +4615,7 @@ def _avro_ocf_stream(spark, sf_dir):
             agg.writeStream.outputMode("complete")
             .format("memory")
             .queryName(name)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="rtba_ckpt_avro_"))
+            .option("checkpointLocation", scratch_dir("rtba_ckpt_avro_"))
             .start()
         )
         try:

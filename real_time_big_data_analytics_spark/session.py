@@ -20,7 +20,15 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+def _host_memory_mb() -> int:
+    with open("/proc/meminfo") as fh:
+        return next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:")) // 1024
+
+
+# Fit the host unless the env says otherwise: every core this process
+# may run on, and a quarter of physical memory for the driver JVM.
+DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
 
 
 def get_spark(app_name: str = "rtba-spark", cpus: str | None = None) -> SparkSession:
@@ -43,7 +51,10 @@ def get_spark(app_name: str = "rtba-spark", cpus: str | None = None) -> SparkSes
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or f"{max(1024, _host_memory_mb() // 4)}m",
+        )
         # Streaming state at harness scale uses the default HDFS-backed
         # store; at 100 TB flip to RocksDB:
         # spark.sql.streaming.stateStore.providerClass=

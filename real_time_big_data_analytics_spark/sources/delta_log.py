@@ -64,6 +64,8 @@ from __future__ import annotations
 import json
 import os
 
+from .staging import staged
+
 PROTOCOL_ACTION = {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
 
 
@@ -957,8 +959,6 @@ def read_snapshot(
 
 # -- staging for the registry query ------------------------------------
 
-_DELTA_DIRS: dict[str, str] = {}
-
 # fixed timestamps: the staged log is byte-reproducible per corpus
 _T0 = 1704067200000
 
@@ -1046,47 +1046,20 @@ def _build_three_version_table(spark, sf_dir: str, stage_dir: str, tag: str) -> 
 
 
 def _stage_table(spark, sf_dir: str, kind: str, post_build=None, builder=None) -> str:
-    """Crash-idempotent staging shared by the delta stagers: build the
-    WHOLE table (data files + all commits + any ``post_build`` step,
-    e.g. checkpointing) in a fresh scratch dir, then atomically rename
-    it into place. A prior run that died mid-build leaves either a
-    partial table_dir (a pre-rename code generation — delete it; its
-    final marker is absent by the guard below) or an orphaned scratch
-    dir (harmless, unique name), never a wedged half-committed log
-    that FileExistsError would then refuse to rebuild forever
-    (ADVICE r7)."""
-    import hashlib
-    import shutil
-    import tempfile
-    import uuid
+    """Staging shared by the delta stagers: the WHOLE table (data
+    files + all commits + any ``post_build`` step, e.g. checkpointing)
+    is built in a scratch dir and published atomically by
+    ``staging.staged``, so a build that died mid-way is discarded and
+    rebuilt, never left as a wedged half-committed log that
+    FileExistsError would then refuse to rebuild forever (ADVICE r7).
+    ``kind`` doubles as the build tag (table id, file names)."""
 
-    st = os.stat(os.path.join(sf_dir, "events.parquet"))
-    tag = hashlib.md5(
-        f"{kind}|{sf_dir}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    cache_key = f"{kind}|{tag}"
-    if cache_key in _DELTA_DIRS:
-        return _DELTA_DIRS[cache_key]
-    table_dir = os.path.join(tempfile.gettempdir(), f"rtba_{kind}_{tag}")
-    done_marker = os.path.join(table_dir, "_staging_complete")
-    if not os.path.exists(done_marker):
-        if os.path.exists(table_dir):
-            shutil.rmtree(table_dir)
-        stage_dir = f"{table_dir}.staging-{uuid.uuid4().hex[:12]}"
-        (builder or _build_three_version_table)(spark, sf_dir, stage_dir, tag)
+    def build(stage_dir: str) -> None:
+        (builder or _build_three_version_table)(spark, sf_dir, stage_dir, kind)
         if post_build is not None:
             post_build(stage_dir)
-        with open(os.path.join(stage_dir, "_staging_complete"), "w") as f:
-            f.write(tag)
-        try:
-            os.rename(stage_dir, table_dir)
-        except OSError:
-            # a concurrent stager renamed first; its table is complete
-            shutil.rmtree(stage_dir, ignore_errors=True)
-            if not os.path.exists(done_marker):
-                raise
-    _DELTA_DIRS[cache_key] = table_dir
-    return table_dir
+
+    return staged(kind, os.path.join(sf_dir, "events.parquet"), build)
 
 
 def stage_events_as_delta(spark, sf_dir: str) -> str:
@@ -1160,8 +1133,6 @@ def stage_events_as_delta_checkpointed(spark, sf_dir: str) -> str:
         write_checkpoint(stage_dir, 1, parts=2)
         expire_commits_before_checkpoint(stage_dir)
 
-    # kind "deltacp2": the r9 multi-part staging must not reuse a
-    # cached single-part table from an earlier round
     return _stage_table(spark, sf_dir, "deltacp2", post_build=post_build)
 
 

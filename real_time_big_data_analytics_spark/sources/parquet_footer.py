@@ -575,7 +575,6 @@ FOOTER_STATS_SQL = (
 
 # -- round 11: the page-index audit query -------------------------------
 
-_PAGE_INDEX_DIRS: dict[str, str] = {}
 PAGE_INDEX_COLS = ("event_id", "user_id", "value")
 
 
@@ -587,30 +586,16 @@ def stage_events_page_indexed(spark, sf_dir: str) -> str:
     ``parquet.page.row.count.limit`` so even the small staging corpora
     have multiple pages per chunk. parquet-mr (Spark's writer) emits
     ColumnIndex/OffsetIndex by default — these are FOREIGN index
-    bytes, not ours. Staged once per corpus fingerprint
-    (crash-idempotent scratch + atomic rename)."""
-    import hashlib
+    bytes, not ours. Staged once per process per corpus fingerprint
+    (``staging.staged``)."""
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from pyspark.sql import functions as F
 
+    from .staging import staged
     from .tables import load_table
 
-    st = os.stat(os.path.join(sf_dir, "events.parquet"))
-    tag = hashlib.md5(
-        f"pageidx|{sf_dir}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    if tag in _PAGE_INDEX_DIRS:
-        return _PAGE_INDEX_DIRS[tag]
-    out_dir = os.path.join(tempfile.gettempdir(), f"rtba_pageidx_{tag}")
-    done = os.path.join(out_dir, "_staging_complete")
-    if not os.path.exists(done):
-        if os.path.exists(out_dir):
-            shutil.rmtree(out_dir)
-        stage = f"{out_dir}.staging-{uuid.uuid4().hex[:12]}"
+    def build(stage: str) -> None:
         (
             load_table(spark, sf_dir, "events")
             .select("event_id", "user_id", "value")
@@ -619,16 +604,8 @@ def stage_events_page_indexed(spark, sf_dir: str) -> str:
             .write.option("parquet.page.row.count.limit", "1000")
             .parquet(os.path.join(stage, "data"))
         )
-        with open(os.path.join(stage, "_staging_complete"), "w") as f:
-            f.write(tag)
-        try:
-            os.rename(stage, out_dir)
-        except OSError:
-            shutil.rmtree(stage, ignore_errors=True)
-            if not os.path.exists(done):
-                raise
-    _PAGE_INDEX_DIRS[tag] = out_dir
-    return out_dir
+
+    return staged("pageidx", os.path.join(sf_dir, "events.parquet"), build)
 
 
 def page_index_stats(spark, sf_dir: str):
@@ -1035,7 +1012,6 @@ def bloom_might_contain(bloom: dict, value) -> bool:
     return True
 
 
-_BLOOM_DIRS: dict[str, str] = {}
 BLOOM_COLS = ("event_id", "user_id")
 BLOOM_ABSENT_PROBES = 100
 _BLOOM_ABSENT_BASE = 10**12  # beyond any staged id: guaranteed absent
@@ -1045,29 +1021,16 @@ def stage_events_bloom_indexed(spark, sf_dir: str) -> str:
     """Write ``events`` as 4 part files split by ``user_id % 4`` (an
     ORACLE-REPRODUCIBLE partitioning — per-file distinct counts are
     plain SQL over the rule) with parquet-mr bloom filters on the two
-    high-cardinality id columns. Staged once per corpus fingerprint."""
-    import hashlib
+    high-cardinality id columns. Staged once per process per corpus
+    fingerprint (``staging.staged``)."""
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from pyspark.sql import functions as F
 
+    from .staging import staged
     from .tables import load_table
 
-    st = os.stat(os.path.join(sf_dir, "events.parquet"))
-    tag = hashlib.md5(
-        f"bloom|{sf_dir}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    if tag in _BLOOM_DIRS:
-        return _BLOOM_DIRS[tag]
-    out_dir = os.path.join(tempfile.gettempdir(), f"rtba_bloom_{tag}")
-    done = os.path.join(out_dir, "_staging_complete")
-    if not os.path.exists(done):
-        if os.path.exists(out_dir):
-            shutil.rmtree(out_dir)
-        stage = f"{out_dir}.staging-{uuid.uuid4().hex[:12]}"
+    def build(stage: str) -> None:
         ev = load_table(spark, sf_dir, "events").select(
             "event_id", "user_id", "value"
         )
@@ -1089,16 +1052,8 @@ def stage_events_bloom_indexed(spark, sf_dir: str) -> str:
             for k, v in writer_opts.items():
                 w = w.option(k, v)
             w.parquet(os.path.join(stage, f"split={i}"))
-        with open(os.path.join(stage, "_staging_complete"), "w") as f:
-            f.write(tag)
-        try:
-            os.rename(stage, out_dir)
-        except OSError:
-            shutil.rmtree(stage, ignore_errors=True)
-            if not os.path.exists(done):
-                raise
-    _BLOOM_DIRS[tag] = out_dir
-    return out_dir
+
+    return staged("bloom", os.path.join(sf_dir, "events.parquet"), build)
 
 
 def bloom_probe_stats(spark, sf_dir: str):

@@ -517,7 +517,6 @@ def read_events_via_kafka_wire(spark, sf_dir: str):
 
 
 WIRE_GROUP_TOPIC = "events_grp"
-_GROUP_RESUME_DIRS: dict[str, str] = {}
 
 
 def stage_group_resume_consumed(spark, sf_dir: str) -> str:
@@ -545,26 +544,17 @@ def stage_group_resume_consumed(spark, sf_dir: str) -> str:
     The union p1 ∪ p2 equals the full events table exactly once: a
     lost commit re-reads pass-1 rows (duplicates), a phantom commit
     skips rows (loss) — either breaks the registry hash. Returns the
-    parquet dir holding the consumed rows."""
+    parquet dir holding the consumed rows; staged once per process
+    per events fingerprint (``staging.staged``)."""
     import atexit
-    import hashlib
     import os
-    import tempfile
 
     from pyspark.sql import functions as F
 
     from . import kafka_wire as KW
+    from .staging import scratch_dir, staged
     from .tables import load_table
 
-    st = os.stat(os.path.join(sf_dir, "events.parquet"))
-    tag = hashlib.md5(
-        f"wiregrp|{sf_dir}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    if tag in _GROUP_RESUME_DIRS:
-        return _GROUP_RESUME_DIRS[tag]
-
-    data_dir = tempfile.mkdtemp(prefix="rtba_grp_broker_")
-    out_dir = tempfile.mkdtemp(prefix="rtba_grp_consumed_")
     topic, nparts, group = WIRE_GROUP_TOPIC, WIRE_NPARTS, "group"
     pkg = _repo_root()
 
@@ -713,20 +703,22 @@ def stage_group_resume_consumed(spark, sf_dir: str) -> str:
             _consume, "key string, value string"
         ).write.mode("overwrite").parquet(dest)
 
-    broker = KW.MiniBroker(data_dir=data_dir)
-    addr = broker.start()
-    _produce_to(addr, payload.filter(F.col("event_id") % 2 == 0))
-    _consume_pass(addr, half=True, dest=os.path.join(out_dir, "p1"))
-    # the crash: a NEW broker (new port) replays the same data_dir —
-    # committed offsets and the log must come back from DISK
-    broker.stop()
-    broker2 = KW.MiniBroker(data_dir=data_dir)
-    addr2 = broker2.start()
-    atexit.register(broker2.stop)
-    _produce_to(addr2, payload.filter(F.col("event_id") % 2 == 1))
-    _consume_pass(addr2, half=False, dest=os.path.join(out_dir, "p2"))
-    _GROUP_RESUME_DIRS[tag] = out_dir
-    return out_dir
+    def build(out_dir: str) -> None:
+        data_dir = scratch_dir("rtba_grp_broker_")
+        broker = KW.MiniBroker(data_dir=data_dir)
+        addr = broker.start()
+        _produce_to(addr, payload.filter(F.col("event_id") % 2 == 0))
+        _consume_pass(addr, half=True, dest=os.path.join(out_dir, "p1"))
+        # the crash: a NEW broker (new port) replays the same data_dir —
+        # committed offsets and the log must come back from DISK
+        broker.stop()
+        broker2 = KW.MiniBroker(data_dir=data_dir)
+        addr2 = broker2.start()
+        atexit.register(broker2.stop)
+        _produce_to(addr2, payload.filter(F.col("event_id") % 2 == 1))
+        _consume_pass(addr2, half=False, dest=os.path.join(out_dir, "p2"))
+
+    return staged("grp_consumed", os.path.join(sf_dir, "events.parquet"), build)
 
 
 WIRE_SNAPPY_TOPIC = "events_snappy"
@@ -1389,31 +1381,22 @@ def make_avro_ocf_datasource():
     return AvroOcfDataSource
 
 
-_AVRO_DIRS: dict[str, str] = {}
-
-
 def stage_events_as_avro(spark, sf_dir: str, codec: str = "deflate") -> str:
     """Write the whole events table as Avro container part files
     through Spark's write path (one file per task, task-commit
-    rename). Staged once per (events fingerprint, codec) and reused —
-    idempotent within a session like the wire broker."""
-    import hashlib
+    rename). Staged once per process per (events fingerprint, codec)
+    (``staging.staged``) and reused."""
+    import json
     import os
-    import tempfile
 
     from pyspark.sql import functions as F
 
+    from .staging import staged
     from .tables import load_table
 
-    st = os.stat(os.path.join(sf_dir, "events.parquet"))
-    tag = hashlib.md5(
-        f"avro|{sf_dir}|{st.st_mtime_ns}|{st.st_size}|{codec}".encode()
-    ).hexdigest()[:12]
-    if tag in _AVRO_DIRS:
-        return _AVRO_DIRS[tag]
-    out = os.path.join(tempfile.gettempdir(), f"rtba_avro_{tag}")
     spark.dataSource.register(make_avro_ocf_datasource())
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+
+    def build(out: str) -> None:
         df = load_table(spark, sf_dir, "events").select(
             "event_id",
             F.unix_micros("ts").alias("ts_us"),
@@ -1422,8 +1405,6 @@ def stage_events_as_avro(spark, sf_dir: str, codec: str = "deflate") -> str:
             "value",
             "props",
         )
-        import json
-
         (
             df.write.format("avro_ocf")
             .mode("overwrite")
@@ -1433,8 +1414,8 @@ def stage_events_as_avro(spark, sf_dir: str, codec: str = "deflate") -> str:
             .option("pkg", _repo_root())
             .save()
         )
-    _AVRO_DIRS[tag] = out
-    return out
+
+    return staged(f"avro_{codec}", os.path.join(sf_dir, "events.parquet"), build)
 
 
 def read_events_via_avro_ocf(spark, sf_dir: str, codec: str = "deflate"):
@@ -2127,11 +2108,11 @@ def stage_events_via_es_sink_datasource(spark, sf_dir: str) -> str:
     into its own index (staged once per fingerprint); returns the
     index name."""
     import json
-    import tempfile
 
     from pyspark.sql import functions as F
 
     from . import es_wire as EW
+    from .staging import scratch_dir
     from ..streaming.runner import _stream_shuffle_partitions, events_stream
 
     addr = _es_addr(spark, sf_dir)
@@ -2160,9 +2141,7 @@ def stage_events_via_es_sink_datasource(spark, sf_dir: str) -> str:
             .option("addr", addr)
             .option("index", index)
             .option("pkg", _repo_root())
-            .option(
-                "checkpointLocation", tempfile.mkdtemp(prefix="rtba_ckpt_essink_")
-            )
+            .option("checkpointLocation", scratch_dir("rtba_ckpt_essink_"))
             .trigger(availableNow=True)
             .start()
         )

@@ -532,12 +532,12 @@ def stream_cdc_materialize(spark: SparkSession, sf_dir: str, n_slices: int = 4) 
     executes multiple times per run.
     """
     import os
-    import tempfile
 
+    from ..sources.staging import scratch_dir
     from ..sources.tables import normalize_timestamps
 
     events = load_table(spark, sf_dir, "events")
-    stage = tempfile.mkdtemp(prefix="rtba_cdc_src_")
+    stage = scratch_dir("rtba_cdc_src_")
     for i in range(n_slices):
         events.filter(F.col("event_id") % n_slices == i).coalesce(1).write.mode(
             "append"
@@ -548,7 +548,7 @@ def stream_cdc_materialize(spark: SparkSession, sf_dir: str, n_slices: int = 4) 
         spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(stage)
     )
 
-    serve_root = tempfile.mkdtemp(prefix="rtba_cdc_serve_")
+    serve_root = scratch_dir("rtba_cdc_serve_")
     state = {"current": None}
     pick = F.max(
         F.struct("ts", "event_id", "event_type", "value")

@@ -22,15 +22,14 @@ equivalence is exactly what the DuckDB oracle checks (SURVEY.md §5.2).
 
 from __future__ import annotations
 
-import atexit
 import contextlib
 import os
-import shutil
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..sources.staging import scratch_dir
 
 # A streaming query's state-store partition count is fixed at first
 # start by spark.sql.shuffle.partitions — a deliberate sizing decision
@@ -38,16 +37,6 @@ from pyspark.sql import functions as F
 # state, so it sizes low (fewer store instances to open/commit);
 # a production deployment sizes to sustained key cardinality instead.
 STREAM_PARTITIONS = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8")
-
-
-def _session_tmpdir(prefix: str) -> str:
-    """mkdtemp that is removed at interpreter exit — a 298-query sweep
-    otherwise leaks one stage dir + one checkpoint dir per streaming
-    replay (same hygiene class as the DuckDB spill-dir fix in
-    tools/check.py, ADVICE r5)."""
-    path = tempfile.mkdtemp(prefix=prefix)
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    return path
 
 
 @contextlib.contextmanager
@@ -86,7 +75,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = spark.read.parquet(path).schema
     # FileStreamSource requires a directory; stage the (read-only)
     # table file(s) into a temp dir via symlink — zero-copy replay.
-    stage = _session_tmpdir("rtba_stream_src_")
+    stage = scratch_dir("rtba_stream_src_")
     if os.path.isdir(path):
         for fn in sorted(os.listdir(path)):
             if fn.endswith(".parquet"):
@@ -112,7 +101,7 @@ def run_foreach_batch(
     receives each micro-batch as a batch DataFrame; with an idempotent
     writer this is the exactly-once pattern (the batch_id is stable
     across replays)."""
-    checkpoint = _session_tmpdir("rtba_ckpt_fb_")
+    checkpoint = scratch_dir("rtba_ckpt_fb_")
     spark = streaming_df.sparkSession
     with _stream_shuffle_partitions(spark):
         query = (
@@ -152,7 +141,7 @@ def run_to_table(spark: SparkSession, streaming_df: DataFrame, *, output_mode: s
     """Run a streaming aggregation to completion (availableNow) into a
     memory sink; return the finite result as a batch DataFrame."""
     name = f"q_{uuid.uuid4().hex[:12]}"
-    checkpoint = os.path.join(_session_tmpdir("rtba_ckpt_"), name)
+    checkpoint = os.path.join(scratch_dir("rtba_ckpt_"), name)
     with _stream_shuffle_partitions(spark):
         query = (
             streaming_df.writeStream.outputMode(output_mode)

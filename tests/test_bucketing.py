@@ -10,7 +10,6 @@ identical at any scale.
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 
 import pytest
@@ -22,8 +21,8 @@ N_BUCKETS = 8
 
 
 @pytest.fixture(scope="module")
-def bucketed(spark, sf_dir):
-    d = tempfile.mkdtemp(prefix="rtba_buckets_")
+def bucketed(spark, sf_dir, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("buckets"))
     suffix = uuid.uuid4().hex[:8]
     names = {}
     for name, table, key in [

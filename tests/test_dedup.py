@@ -426,3 +426,23 @@ def test_training_mix_v2_matches_python_replay(spark, sf_dir):
         assert abs(r.token_share - sum(toks) / total_tokens) < 1e-5
         assert r.avg_lr >= 0
     assert abs(sum(r.token_share for r in rows.values()) - 1.0) < 1e-4
+
+
+def test_jaccard_prefilters_keep_the_rounding_window(spark, tmp_path):
+    """Pairs are kept on round2(J, 4) >= t, so J in [t - 5e-5, t)
+    qualifies: doc 1 (16,000 shingles) inside doc 2 (20,001) has
+    J = 0.79996 -> 0.8000. A prune bound on raw min/max >= t drops it."""
+    from fractions import Fraction
+
+    from real_time_big_data_analytics_spark.operators import text
+
+    assert text.jaccard_prune_floor(0.8) == Fraction(15999, 20000)
+    words = [f"w{i}" for i in range(20003)]
+    docs = spark.createDataFrame(
+        [(1, " ".join(words[:16002])), (2, " ".join(words))],
+        "doc_id LONG, text STRING",
+    )
+    docs.write.parquet(str(tmp_path / "documents.parquet"))
+    for fn in (text.ngram_jaccard_pairs, text.ppjoin_jaccard_pairs):
+        rows = [tuple(r) for r in fn(spark, str(tmp_path), threshold=0.8).collect()]
+        assert rows == [(1, 2, 0.8)], fn.__name__

@@ -73,15 +73,15 @@ def test_gdpr_delete_rewrites_only_the_forget_bucket(spark, sf_dir, monkeypatch,
     actually erase the forget users from the rewritten bucket."""
     import glob
     import os
-    import tempfile
 
     from pyspark.sql import functions as F
 
     from real_time_big_data_analytics_spark.operators.incremental import (
         gdpr_forget_audit,
     )
+    from real_time_big_data_analytics_spark.sources import staging
 
-    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(staging, "_ROOT", str(tmp_path))
     rows = gdpr_forget_audit(spark, sf_dir).collect()
     (root,) = glob.glob(str(tmp_path / "rtba_gdpr_*"))
 
@@ -110,16 +110,16 @@ def test_gdpr_partial_delete_rewrites_in_place(spark, monkeypatch, tmp_path):
     rewrite path."""
     import glob
     import os
-    import tempfile
 
     from pyspark.sql import functions as F
 
     from real_time_big_data_analytics_spark.operators.incremental import (
         gdpr_forget_audit,
     )
+    from real_time_big_data_analytics_spark.sources import staging
     from tests.conftest import SF_CORRECT
 
-    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(staging, "_ROOT", str(tmp_path))
     rows = gdpr_forget_audit(spark, SF_CORRECT).collect()
     (root,) = glob.glob(str(tmp_path / "rtba_gdpr_*"))
     audited = {r.user_bucket: r for r in rows}

@@ -337,11 +337,10 @@ def test_kafka_wire_datasource_roundtrips_events_exactly(spark, sf_dir):
         assert set(rec) >= {"event_id", "user_id", "event_type"}
 
 
-def test_kafka_wire_stream_offsets_advance_per_partition(spark, sf_dir):
+def test_kafka_wire_stream_offsets_advance_per_partition(spark, sf_dir, tmp_path):
     """The streaming twin drains the topic in WIRE_NPARTS micro-
     batches (offset = consumer position) and the drained rows equal
     the batch scan exactly."""
-    import tempfile
     import uuid
 
     from real_time_big_data_analytics_spark.sources.pyds import (
@@ -359,9 +358,7 @@ def test_kafka_wire_stream_offsets_advance_per_partition(spark, sf_dir):
             stream.writeStream.outputMode("append")
             .format("memory")
             .queryName(name)
-            .option(
-                "checkpointLocation", tempfile.mkdtemp(prefix="rtba_ckpt_kwt_")
-            )
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
             .start()
         )
         try:

@@ -50,19 +50,36 @@ def test_stream_sessions_match_batch_sessionization(spark, sf_dir):
     assert _as_set(stream) == _as_set(batch)
 
 
+def test_sessionize_gap_keeps_the_subsecond_part(spark, tmp_path):
+    """The 30-minute gap test runs on microseconds like the oracle's
+    epoch(ts): 0.0 -> 1800.5 s opens a second session (a whole-second
+    cast saw 1800 and did not); 0.5 -> 1800.5 s, exactly 1800 s, does not."""
+    import datetime as dt
+
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [
+        (1, 1, t0),
+        (2, 1, t0 + dt.timedelta(seconds=1800.5)),
+        (3, 2, t0 + dt.timedelta(seconds=0.5)),
+        (4, 2, t0 + dt.timedelta(seconds=1800.5)),
+    ]
+    events = spark.createDataFrame(rows, "event_id LONG, user_id LONG, ts TIMESTAMP")
+    events.write.parquet(str(tmp_path / "events.parquet"))
+    out = _as_set(sessionize_events(spark, str(tmp_path)))
+    assert out == {(1, 2, 2), (2, 1, 2)}
+
+
 def test_stream_scoring_counts_total(spark, sf_dir):
     out = sq.stream_scored_verdicts(spark, sf_dir).collect()
     assert {r.bolt_user for r in out} <= {"Bolt", "Not bolt"}
     assert sum(r.n_events for r in out) > 0
 
 
-def test_processing_time_trigger_with_rate_source(spark):
+def test_processing_time_trigger_with_rate_source(spark, tmp_path):
     """T1/S1 — the production trigger shape: a live unbounded source
     (rate — the Twitter-receiver substitute, SURVEY.md §2.1 S1) with a
     processingTime trigger, windowed count into a memory sink. Proves
     the continuous path works, not just availableNow replay."""
-    import os
-    import tempfile
     import time
     import uuid
 
@@ -80,10 +97,7 @@ def test_processing_time_trigger_with_rate_source(spark):
         stream.writeStream.outputMode("complete")
         .format("memory")
         .queryName(name)
-        .option(
-            "checkpointLocation",
-            os.path.join(tempfile.mkdtemp(prefix="rtba_rate_"), name),
-        )
+        .option("checkpointLocation", str(tmp_path / name))
         .trigger(processingTime="250 milliseconds")
         .start()
     )
