@@ -216,6 +216,10 @@ def force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+# multi-core calibration width: every core this process may run on
+MC_PROCS = len(os.sched_getaffinity(0))
+
+
 def _ambient() -> dict:
     """Host-condition snapshot (VERDICT r6 ask #4): loadavg, memory /
     page-cache, cpufreq if readable, and a ~2 s single-thread
@@ -251,8 +255,9 @@ def _ambient() -> dict:
         acc += i * i & 0xFFFF
     amb["calib_sec"] = round(time.monotonic() - t0, 4)
     amb["calib_check"] = acc & 0xFFFF  # pin the loop against DCE-style edits
-    # MULTI-CORE calibration (round 9): 8 processes running the same
-    # loop concurrently. Background multi-core load (other tenants'
+    # MULTI-CORE calibration (round 9): one process per usable core
+    # (``calib_mc_procs``, the affinity mask) running the same loop
+    # concurrently. Background multi-core load (other tenants'
     # Spark jobs) inflates THIS reading while leaving the single-thread
     # one untouched — exactly the contention mode that inflated r8/r9
     # shuffle-heavy queries ~15% at normal single-thread speed, which
@@ -262,9 +267,10 @@ def _ambient() -> dict:
     try:
         import multiprocessing as mp
 
-        with mp.get_context("fork").Pool(8) as pool:
+        amb["calib_mc_procs"] = MC_PROCS
+        with mp.get_context("fork").Pool(MC_PROCS) as pool:
             t0 = time.monotonic()
-            pool.map(_mc_calib_worker, range(8))
+            pool.map(_mc_calib_worker, range(MC_PROCS))
             amb["calib_mc_sec"] = round(time.monotonic() - t0, 4)
     except Exception:
         amb["calib_mc_sec"] = None
@@ -302,18 +308,18 @@ def _mc_calib_quick_worker(_i: int) -> int:
 
 
 def _mc_calib_quick() -> float | None:
-    """Short MULTI-CORE calibration (round 10, VERDICT r9 ask #6): 8
-    forked processes running the quick loop concurrently. Co-tenant
-    MULTI-core load inflates this while leaving the single-thread
+    """Short MULTI-CORE calibration (round 10, VERDICT r9 ask #6): one
+    forked process per usable core running the quick loop concurrently.
+    Co-tenant MULTI-core load inflates this while leaving the single-thread
     reading untouched — the contention mode r9 could only attribute
     post-hoc; interleaved per-bracket it becomes a requeue signal and
     a normalization axis. ~0.2-0.4 s nominal; None if fork fails."""
     try:
         import multiprocessing as mp
 
-        with mp.get_context("fork").Pool(8) as pool:
+        with mp.get_context("fork").Pool(MC_PROCS) as pool:
             t0 = time.monotonic()
-            pool.map(_mc_calib_quick_worker, range(8))
+            pool.map(_mc_calib_quick_worker, range(MC_PROCS))
             return time.monotonic() - t0
     except Exception:
         return None

@@ -1781,185 +1781,298 @@ HNSW_EF_SWEEP = (4, 16, 64)
 # empirical per-ef recall floors pinned by tests at every harness SF;
 # chosen with margin below observed minima (see tests/test_similarity)
 HNSW_SWEEP_FLOORS = {4: 0.2, 16: 0.55, 64: 0.85}
+HNSW_FULL_DOT_MAX = 8192  # full distance-row precompute pays below this n
+HNSW_EDGES_SCHEMA = "node_id bigint, layer int, neighbor_id bigint"
+
+
+def _hnsw_kernel(m: int, ef_c: int = HNSW_EF_CONSTRUCTION):
+    """The HNSW algorithm (Malkov & Yashunin 2016, public algorithm:
+    exponentially-distributed layers, greedy descent, beam search with
+    ef candidates, bidirectional M-bounded links) over ONE shard, as the
+    closures every per-shard ``applyInPandas`` body below calls. It is
+    called on the driver and the bodies close over what it returns;
+    cloudpickle ships nested defs BY VALUE, and these close over ints,
+    numpy, pandas and the stdlib only — never a package name, which a
+    worker that cannot import the package would fail to load (the
+    verify-recipe trap). ``HNSW_FULL_DOT_MAX`` is read here, on the
+    driver, at call time.
+
+    Everything is deterministic: insertion order = ascending vec_id (an
+    append inserts base ascending, then new ascending), node level =
+    hash(vec_id) (not RNG state), distances rounded to 9 dp with index
+    tie-breaks, adjacency lists kept sorted.
+
+    Optimization r12 (guide §4.2, VERDICT r11 ask #3): distances are
+    vectorized per query/insertion — ONE einsum row instead of a numpy
+    dot per visited neighbor (123k per sf0.1 shard, ~70% of kernel
+    time was per-call numpy overhead). The vectorized row
+    ``np.round(1.0 - einsum(unit, qu), 9)`` is EXACTLY equal to the
+    scalar ``round(1.0 - float(unit[i] @ qu), 9)`` for every distance
+    this corpus produces (pinned exhaustively in
+    tests/test_hnsw_vectorized_rounding.py). Above ``HNSW_FULL_DOT_MAX``
+    rows the kernel falls back to the scalar per-neighbor path: a full
+    O(n) row per insertion would not be scale-safe on RAM-sized big
+    shards, while the beam search touches O(ef·deg·log n) nodes. einsum,
+    not BLAS matmul, on purpose: gemv engages OpenBLAS threading, which
+    under concurrent Spark tasks measured 6x SLOWER than the scalar
+    loop; einsum is single-threaded regardless of worker env."""
+    import heapq
+    import math
+    from bisect import bisect_left
+    from types import SimpleNamespace
+
+    import numpy as np
+    import pandas as pd
+
+    full_dot_max = HNSW_FULL_DOT_MAX
+    m_l = 1.0 / math.log(m)
+
+    def shard(vec_pdf, edge_pdf=None, order=None):
+        """One shard as a graph: its vectors in insertion order
+        (ascending vec_id unless ``order`` is given), unit-normalised,
+        each node's level, and the adjacency — empty, or rebuilt from
+        persisted edge rows. ``order`` is kept to align other columns."""
+        ids = vec_pdf["vec_id"].to_numpy()
+        if order is None:
+            order = np.argsort(ids)
+        vecs = np.stack(vec_pdf["embedding"].to_numpy())[order].astype(np.float64)
+        norms = np.sqrt((vecs * vecs).sum(axis=1))
+        g = SimpleNamespace(
+            order=order,
+            ids=ids[order],
+            unit=vecs / np.maximum(norms, 1e-12)[:, None],
+            level=[],
+        )
+        for vid in g.ids:
+            # deterministic "uniform" level draw from the vector id
+            h = (int(vid) * 2654435761 + 97) % (1 << 32)
+            u = (h + 1) / float((1 << 32) + 1)
+            g.level.append(min(int(-math.log(u) * m_l), 8))
+        g.adj = [{layer: [] for layer in range(lv + 1)} for lv in g.level]
+        if edge_pdf is not None:
+            idx_of = {int(v): i for i, v in enumerate(g.ids)}
+            for node, layer, nb in zip(
+                edge_pdf["node_id"], edge_pdf["layer"], edge_pdf["neighbor_id"]
+            ):
+                g.adj[idx_of[int(node)]][int(layer)].append(idx_of[int(nb)])
+            for pl in g.adj:
+                for layer, nbrs in pl.items():
+                    pl[layer] = sorted(set(nbrs))
+        return g
+
+    def entry_point(g, n):
+        """The builder's entry after inserting the first n nodes: the
+        highest level, first inserted among equals (the entry only
+        moves on a STRICTLY higher level)."""
+        entry, top = None, -1
+        for i in range(n):
+            if g.level[i] > top:
+                entry, top = i, g.level[i]
+        return entry, top
+
+    def dist_row(g, qu):
+        """Rounded distance from qu to every node; None past
+        HNSW_FULL_DOT_MAX nodes (search_layer then computes each one)."""
+        if len(g.ids) > full_dot_max:
+            return None
+        return np.round(1.0 - np.einsum("ij,j->i", g.unit, qu), 9).tolist()
+
+    def search_layer(g, qu, dv, eps, ef, layer):
+        """Beam search: returns [(dist, idx)] ascending, <= ef."""
+        adj, unit = g.adj, g.unit
+        if dv is not None:
+            dq = dv.__getitem__
+        else:
+            def dq(i):  # rounded cosine distance: deterministic tie-breaks
+                return round(1.0 - float(unit[i] @ qu), 9)
+        visited = set(eps)
+        cand = [(dq(e), e) for e in eps]
+        heapq.heapify(cand)
+        res = [(-d, e) for d, e in cand]
+        heapq.heapify(res)
+        while cand:
+            d, c = heapq.heappop(cand)
+            if res and d > -res[0][0]:
+                break
+            for nb in adj[c].get(layer, ()):
+                if nb in visited:
+                    continue
+                visited.add(nb)
+                dn = dq(nb)
+                if len(res) < ef or dn < -res[0][0]:
+                    heapq.heappush(cand, (dn, nb))
+                    heapq.heappush(res, (-dn, nb))
+                    if len(res) > ef:
+                        heapq.heappop(res)
+        return sorted(((-d, e) for d, e in res), key=lambda t: (t[0], t[1]))
+
+    def descend(g, qu, dv, entry, top, layer):
+        """Greedy ef=1 descent from the entry: the entry point for the
+        first layer at or below ``layer``."""
+        ep = [entry]
+        for la in range(top, layer, -1):
+            ep = [search_layer(g, qu, dv, ep, 1, la)[0][1]]
+        return ep
+
+    def prune(g, e, nbrs, mmax):
+        """``nbrs`` cut to the mmax closest to node e (rounded distance,
+        tie on index), sorted."""
+        ds = np.round(1.0 - np.einsum("ij,j->i", g.unit[nbrs], g.unit[e]), 9)
+        return sorted(x for _, x in sorted(zip(ds.tolist(), nbrs))[:mmax])
+
+    def insert_sorted(lst, x):
+        p = bisect_left(lst, x)
+        if p == len(lst) or lst[p] != x:
+            lst.insert(p, x)
+
+    def insert(g, start):
+        """Insert nodes ``start``.. in order into the graph over the
+        nodes before them: descent, a beam of ef_c per layer, links to
+        the m closest both ways, and an overflowing list pruned back to
+        the M bound (m above layer 0, 2m at layer 0)."""
+        adj, unit = g.adj, g.unit
+        entry, top = entry_point(g, start)
+        for i in range(start, len(g.ids)):
+            li = g.level[i]
+            if entry is None:
+                entry, top = i, li
+                continue
+            qu = unit[i]
+            dv = dist_row(g, qu)
+            ep = descend(g, qu, dv, entry, top, li)
+            for layer in range(min(top, li), -1, -1):
+                cands = search_layer(g, qu, dv, ep, ef_c, layer)
+                mmax = m if layer > 0 else 2 * m
+                for _, e in cands[:m]:
+                    insert_sorted(adj[i][layer], e)
+                    insert_sorted(adj[e][layer], i)
+                    if len(adj[e][layer]) > mmax:
+                        adj[e][layer] = prune(g, e, adj[e][layer], mmax)
+                ep = [e for _, e in cands]
+            if li > top:
+                entry, top = i, li
+
+    def search(g, queries, k, ef, excluded=frozenset(), rows=None):
+        """Each query's k nearest nodes — never the query itself, never
+        an ``excluded`` id — by descent to layer 0 and a beam of ef+1
+        there: (query ids, vec ids). ``rows`` caches each query's
+        distance row (by position) across calls over one graph."""
+        rows = {} if rows is None else rows
+        entry, top = entry_point(g, len(g.ids))
+        out_q, out_v = [], []
+        for pos, (qid, qvec) in enumerate(queries):
+            qu = np.asarray(qvec, dtype=np.float64)
+            qu = qu / max(math.sqrt(float(qu @ qu)), 1e-12)
+            if pos not in rows:
+                rows[pos] = dist_row(g, qu)
+            dv = rows[pos]
+            ep = descend(g, qu, dv, entry, top, 0)
+            # beam width IS ef (+1 covers self-exclusion): an ef below k
+            # legitimately returns fewer than k hits, which is exactly
+            # what the recall sweep measures
+            taken = 0
+            for _d, e in search_layer(g, qu, dv, ep, ef + 1, 0):
+                vid = int(g.ids[e])
+                if vid == qid or vid in excluded:
+                    continue
+                out_q.append(qid)
+                out_v.append(vid)
+                taken += 1
+                if taken >= k:
+                    break
+        return out_q, out_v
+
+    def edges(g, keep=None):
+        """The adjacency as (node_id, layer, neighbor_id) rows — the
+        whole persisted index, since levels and the entry point derive
+        from the ids. Nodes whose ``keep`` flag is false are left out."""
+        rows_n, rows_l, rows_nb = [], [], []
+        for i, pl in enumerate(g.adj):
+            if keep is not None and not keep[i]:
+                continue
+            for layer, nbrs in pl.items():
+                for nb in nbrs:
+                    rows_n.append(int(g.ids[i]))
+                    rows_l.append(layer)
+                    rows_nb.append(int(g.ids[nb]))
+        return pd.DataFrame(
+            {"node_id": rows_n, "layer": rows_l, "neighbor_id": rows_nb}
+        )
+
+    return SimpleNamespace(
+        shard=shard,
+        entry_point=entry_point,
+        insert_sorted=insert_sorted,
+        prune=prune,
+        insert=insert,
+        search=search,
+        edges=edges,
+    )
 
 
 def _hnsw_candidate_fn(
     queries: list, k: int, efs: tuple, m: int, ef_c: int, emit: str = "candidates"
 ):
-    """Build the ``applyInPandas`` body: construct an HNSW graph over
-    ONE shard's vectors (Malkov & Yashunin 2016, public algorithm:
-    exponentially-distributed layers, greedy descent, beam search with
-    ef candidates, bidirectional M-bounded links) and search every
-    query at each requested ef. Nested def: cloudpickle ships it BY
-    VALUE (closure over plain lists/ints only — the verify-recipe
-    trap). Everything is deterministic: insertion order = sorted
-    vec_id, node level = hash(vec_id) (not RNG state), distances
-    rounded to 9 dp with index tie-breaks, neighbor iteration sorted.
+    """Build the ``applyInPandas`` body: construct the HNSW graph over
+    ONE shard's vectors and search every query at each requested ef →
+    (query_id, vec_id, ef) candidates.
 
     ``emit="edges"`` returns the constructed graph's adjacency rows
     (node_id, layer, neighbor_id) instead of searching — the
     PERSISTENCE path (levels and the entry point are derivable from
-    the id hash, so edges are the whole index).
-
-    Optimization r12 (guide §4.2, VERDICT r11 ask #3): distances are
-    vectorized per query/insertion — ONE einsum row instead of a numpy
-    dot per visited neighbor (123k per sf0.1 shard, ~70% of kernel
-    time was per-call numpy overhead), and adjacency lists are kept
-    sorted so the per-step ``sorted()`` disappears. The vectorized
-    row ``np.round(1.0 - einsum(unit, qu), 9)`` is EXACTLY equal to
-    the scalar ``round(1.0 - float(unit[i] @ qu), 9)`` for every
-    distance this corpus produces (pinned exhaustively in
-    tests/test_hnsw_vectorized_rounding.py), so graphs and results are
-    bit-identical to the r11 kernel (verified frame-equal at all 3 SFs
-    per shard, both emit modes). Above ``FULL_DOT_MAX`` rows the
-    kernel falls back to the scalar per-neighbor path: a full O(n) row
-    per insertion would not be scale-safe on RAM-sized big shards,
-    while the beam search touches O(ef·deg·log n) nodes. einsum, not
-    BLAS matmul, on purpose: gemv engages OpenBLAS threading, which
-    under concurrent Spark tasks measured 6x SLOWER than the scalar
-    loop; einsum is single-threaded regardless of worker env."""
+    the id hash, so edges are the whole index)."""
+    hk = _hnsw_kernel(m, ef_c)
 
     def build_and_search(pdf):
-        import heapq
-        import math
-        from bisect import bisect_left
-
-        import numpy as np
         import pandas as pd
 
-        ids = pdf["vec_id"].to_numpy()
-        order = np.argsort(ids)
-        ids = ids[order]
-        vecs = np.stack(pdf["embedding"].to_numpy())[order].astype(np.float64)
-        norms = np.sqrt((vecs * vecs).sum(axis=1))
-        unit = vecs / np.maximum(norms, 1e-12)[:, None]
-        n = len(ids)
-        FULL_DOT_MAX = 8192  # full-row precompute pays below this n
-
-        def dist_row(qu):
-            # rounded-distance row; == round(1.0 - float(unit[i] @ qu), 9)
-            # elementwise on this corpus (pinned by test)
-            return np.round(1.0 - np.einsum("ij,j->i", unit, qu), 9).tolist()
-
-        def d_to(qu, i):
-            # rounded cosine distance: deterministic tie-breaks
-            return round(1.0 - float(unit[i] @ qu), 9)
-
-        # deterministic "uniform" level draw from the vector id
-        m_l = 1.0 / math.log(m)
-        level_of = []
-        for vid in ids:
-            h = (int(vid) * 2654435761 + 97) % (1 << 32)
-            u = (h + 1) / float((1 << 32) + 1)
-            level_of.append(min(int(-math.log(u) * m_l), 8))
-        adj: list[dict[int, list]] = [
-            {layer: [] for layer in range(lv + 1)} for lv in level_of
-        ]
-
-        def search_layer(qu, dv, eps, ef, layer):
-            """Beam search: returns [(dist, idx)] ascending, <= ef."""
-            dq = dv.__getitem__ if dv is not None else (lambda x: d_to(qu, x))
-            visited = set(eps)
-            cand = [(dq(e), e) for e in eps]
-            heapq.heapify(cand)
-            res = [(-d, e) for d, e in cand]
-            heapq.heapify(res)
-            while cand:
-                d, c = heapq.heappop(cand)
-                if res and d > -res[0][0]:
-                    break
-                for nb in adj[c].get(layer, ()):
-                    if nb in visited:
-                        continue
-                    visited.add(nb)
-                    dn = dq(nb)
-                    if len(res) < ef or dn < -res[0][0]:
-                        heapq.heappush(cand, (dn, nb))
-                        heapq.heappush(res, (-dn, nb))
-                        if len(res) > ef:
-                            heapq.heappop(res)
-            return sorted(((-d, e) for d, e in res), key=lambda t: (t[0], t[1]))
-
-        def _insert_sorted(lst, x):
-            p = bisect_left(lst, x)
-            if p == len(lst) or lst[p] != x:
-                lst.insert(p, x)
-
-        entry, top = None, -1
-        for i in range(n):
-            li = level_of[i]
-            if entry is None:
-                entry, top = i, li
-                continue
-            qu = unit[i]
-            dv = dist_row(qu) if n <= FULL_DOT_MAX else None
-            ep = [entry]
-            for layer in range(top, li, -1):
-                ep = [search_layer(qu, dv, ep, 1, layer)[0][1]]
-            for layer in range(min(top, li), -1, -1):
-                cands = search_layer(qu, dv, ep, ef_c, layer)
-                mmax = m if layer > 0 else 2 * m
-                for _, e in cands[:m]:
-                    _insert_sorted(adj[i][layer], e)
-                    lst_e = adj[e][layer]
-                    _insert_sorted(lst_e, i)
-                    if len(lst_e) > mmax:
-                        ds = np.round(
-                            1.0 - np.einsum("ij,j->i", unit[lst_e], unit[e]), 9
-                        )
-                        keyed = sorted(zip(ds.tolist(), lst_e))[:mmax]
-                        adj[e][layer] = sorted(x for _, x in keyed)
-                ep = [e for _, e in cands]
-            if li > top:
-                entry, top = i, li
-
+        g = hk.shard(pdf)
+        hk.insert(g, 0)
         if emit == "edges":
-            rows_n, rows_l, rows_nb = [], [], []
-            for i in range(n):
-                for layer, nbrs in adj[i].items():
-                    for nb in nbrs:
-                        rows_n.append(int(ids[i]))
-                        rows_l.append(layer)
-                        rows_nb.append(int(ids[nb]))
-            return pd.DataFrame(
-                {"node_id": rows_n, "layer": rows_l, "neighbor_id": rows_nb}
-            )
-
+            return hk.edges(g)
         out_q, out_v, out_ef = [], [], []
-        qrows: dict = {}  # per-query distance row, shared across efs
+        rows: dict = {}  # per-query distance row, shared across efs
         for ef in efs:
-            for qid, qvec in queries:
-                qu = np.asarray(qvec, dtype=np.float64)
-                qn = math.sqrt(float(qu @ qu))
-                qu = qu / max(qn, 1e-12)
-                if qid in qrows:
-                    dv = qrows[qid]
-                elif n <= FULL_DOT_MAX:
-                    dv = qrows[qid] = dist_row(qu)
-                else:
-                    dv = None
-                ep = [entry]
-                for layer in range(top, 0, -1):
-                    ep = [search_layer(qu, dv, ep, 1, layer)[0][1]]
-                # beam width IS ef (+1 covers self-exclusion): an
-                # ef below k legitimately returns fewer than k hits,
-                # which is exactly what the recall sweep measures
-                res = search_layer(qu, dv, ep, ef + 1, 0)
-                taken = 0
-                for _d, e in res:
-                    if int(ids[e]) == qid:
-                        continue  # never return the query itself
-                    out_q.append(qid)
-                    out_v.append(int(ids[e]))
-                    out_ef.append(ef)
-                    taken += 1
-                    if taken >= k:
-                        break
-        return pd.DataFrame(
-            {"query_id": out_q, "vec_id": out_v, "ef": out_ef}
-        )
+            q, v = hk.search(g, queries, k, ef, rows=rows)
+            out_q += q
+            out_v += v
+            out_ef += [ef] * len(q)
+        return pd.DataFrame({"query_id": out_q, "vec_id": out_v, "ef": out_ef})
 
     return build_and_search
+
+
+def _with_shard(df: DataFrame, col: str = "vec_id", n_shards: int = HNSW_SHARDS):
+    """``df`` plus its deterministic shard id, ``col % n_shards``."""
+    return df.withColumn("shard", (F.col(col) % n_shards).cast("int"))
+
+
+def _demo_queries(emb: DataFrame) -> list:
+    """The demo query vectors as (vec_id, [float]): the bounded
+    driver-side metadata every HNSW search body closes over."""
+    return [
+        (int(r.vec_id), [float(x) for x in r.embedding])
+        for r in emb.filter(F.col("vec_id") < N_QUERIES)
+        .select("vec_id", "embedding")
+        .collect()  # bounded: the N_QUERIES demo query vectors
+    ]
+
+
+def _hnsw_sims(cands: DataFrame, emb: DataFrame) -> DataFrame:
+    """HNSW candidates re-scored with the SAME Catalyst cosine
+    expression as the exact path, so sims are bit-identical to brute
+    force for the pairs returned; every candidate column is kept."""
+    qdf = emb.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q")
+    )
+    return (
+        cands.join(emb.select("vec_id", "embedding"), "vec_id")
+        .join(F.broadcast(qdf), "query_id")
+        .select(
+            *cands.columns,
+            round2(cosine_similarity("q", "embedding"), 6).alias("sim"),
+        )
+    )
 
 
 def _hnsw_candidates(
@@ -1979,18 +2092,10 @@ def _hnsw_candidates(
     wire. Query vectors are bounded driver-side metadata (N_QUERIES
     rows), like the IVF/MMR paths."""
     emb = spread(load_table(spark, sf_dir, "embeddings"))
-    queries = [
-        (int(r.vec_id), [float(x) for x in r.embedding])
-        for r in emb.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", "embedding")
-        .collect()  # bounded: the N_QUERIES demo query vectors
-    ]
-    corpus = emb.withColumn(
-        "shard", (F.col("vec_id") % n_shards).cast("int")
-    )
     fn = _hnsw_candidate_fn(
-        queries, k, tuple(efs), HNSW_M, HNSW_EF_CONSTRUCTION
+        _demo_queries(emb), k, tuple(efs), HNSW_M, HNSW_EF_CONSTRUCTION
     )
+    corpus = _with_shard(emb, n_shards=n_shards)
     return _sharded(corpus, n_groups=n_shards).applyInPandas(
         fn, "query_id bigint, vec_id bigint, ef int"
     )
@@ -2003,24 +2108,11 @@ def knn_hnsw(
     ef_search: int = HNSW_EF_SEARCH,
 ) -> DataFrame:
     """L3 — HNSW top-k: per-shard graph search, candidates re-scored
-    with the SAME Catalyst cosine expression as the exact path (so
-    sims are bit-identical to brute force for the pairs returned),
-    merged into the global top-k."""
+    with the exact cosine (``_hnsw_sims``), merged into the global
+    top-k."""
     cands = _hnsw_candidates(spark, sf_dir, k, (ef_search,)).drop("ef")
     emb = spread(load_table(spark, sf_dir, "embeddings"))
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q")
-    )
-    sims = (
-        cands.join(emb.select("vec_id", "embedding"), "vec_id")
-        .join(F.broadcast(queries), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            round2(cosine_similarity("q", "embedding"), 6).alias("sim"),
-        )
-    )
-    return _ranked_topk(sims, k)
+    return _ranked_topk(_hnsw_sims(cands, emb), k)
 
 
 def knn_hnsw_checked(spark: SparkSession, sf_dir: str, k: int = TOP_K) -> DataFrame:
@@ -2039,23 +2131,9 @@ def hnsw_recall_sweep(
     oracle is the bound-assertion twin: exact n_queries/k columns plus
     per-ef asserted invariants (recall >= pinned floor, all candidate
     sims match the exact cosine, result sets within k)."""
-    efs = HNSW_EF_SWEEP
-    cands = _hnsw_candidates(spark, sf_dir, k, efs)
+    cands = _hnsw_candidates(spark, sf_dir, k, HNSW_EF_SWEEP)
     emb = spread(load_table(spark, sf_dir, "embeddings"))
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q")
-    )
-    sims = (
-        cands.join(emb.select("vec_id", "embedding"), "vec_id")
-        .join(F.broadcast(queries), "query_id")
-        .select(
-            "ef",
-            "query_id",
-            "vec_id",
-            round2(cosine_similarity("q", "embedding"), 6).alias("sim"),
-        )
-    )
-    ranked = sims.withColumn(
+    ranked = _hnsw_sims(cands, emb).withColumn(
         "rk",
         F.row_number().over(
             Window.partitionBy("ef", "query_id").orderBy(
@@ -2105,8 +2183,16 @@ FROM (VALUES (4, 5), (16, 5), (64, 5)) AS t(ef, n_queries)
 ORDER BY ef
 """
 
-
 # --- HNSW persisted index: build once, search many (round 9) ----------
+
+def _hnsw_edges(corpus: DataFrame) -> DataFrame:
+    """Per-shard HNSW graphs built over a shard-tagged corpus, as
+    shard-tagged edge rows."""
+    fn = _hnsw_candidate_fn([], 0, (), HNSW_M, HNSW_EF_CONSTRUCTION, emit="edges")
+    return _with_shard(
+        _sharded(corpus).applyInPandas(fn, HNSW_EDGES_SCHEMA), "node_id"
+    )
+
 
 def hnsw_index_write(spark: SparkSession, sf_dir: str) -> str:
     """Persist the per-shard HNSW graphs as a shard-partitioned
@@ -2120,128 +2206,56 @@ def hnsw_index_write(spark: SparkSession, sf_dir: str) -> str:
 
     def build(stage: str) -> None:
         emb = spread(load_table(spark, sf_dir, "embeddings"))
-        corpus = emb.withColumn(
-            "shard", (F.col("vec_id") % HNSW_SHARDS).cast("int")
+        _hnsw_edges(_with_shard(emb)).write.partitionBy("shard").parquet(
+            os.path.join(stage, "edges")
         )
-        fn = _hnsw_candidate_fn(
-            [], 0, (), HNSW_M, HNSW_EF_CONSTRUCTION, emit="edges"
-        )
-        edges = _sharded(corpus).applyInPandas(
-            fn, "node_id bigint, layer int, neighbor_id bigint"
-        ).withColumn("shard", (F.col("node_id") % HNSW_SHARDS).cast("int"))
-        edges.write.partitionBy("shard").parquet(os.path.join(stage, "edges"))
 
     return staged("hnswidx", os.path.join(sf_dir, "embeddings.parquet"), build)
 
 
-def _hnsw_search_edges_fn(queries: list, k: int, ef: int, m: int):
+def _hnsw_search_edges_fn(
+    queries: list, k: int, ef: int, m: int, excluded: frozenset = frozenset()
+):
     """Cogrouped search body: one shard's VECTORS (left) + its
     persisted EDGE rows (right) → per-query local top-k candidates.
-    Reconstructs the adjacency and replays exactly the search the
-    inline builder runs (same rounded distances, same tie-breaks, same
-    descent) — tests/test_similarity.py pins indexed ≡ fresh-build
-    results EXACTLY, so any drift between this copy of the beam search
-    and the builder's is caught."""
+    Rebuilds the adjacency and runs the kernel search the inline
+    builder runs, so indexed ≡ fresh-build results exactly (pinned by
+    tests/test_similarity.py).
+
+    ``excluded`` is a TOMBSTONE set: traversal runs THROUGH tombstoned
+    nodes (they are still edges in the graph — removing them from the
+    descent would strand their neighborhoods) but an excluded id is
+    never EMITTED. This is the serve-side semantics between a delete
+    and the compaction that physically removes the node."""
+    hk = _hnsw_kernel(m)
 
     def search_shard(vec_pdf, edge_pdf):
-        import heapq
-        import math
-
-        import numpy as np
         import pandas as pd
 
-        ids = vec_pdf["vec_id"].to_numpy()
-        order = np.argsort(ids)
-        ids = ids[order]
-        vecs = np.stack(vec_pdf["embedding"].to_numpy())[order].astype(
-            np.float64
-        )
-        norms = np.sqrt((vecs * vecs).sum(axis=1))
-        unit = vecs / np.maximum(norms, 1e-12)[:, None]
-        n = len(ids)
-        idx_of = {int(v): i for i, v in enumerate(ids)}
-        FULL_DOT_MAX = 8192  # see _hnsw_candidate_fn (r12 vectorization)
-
-        m_l = 1.0 / math.log(m)
-        level_of = []
-        for vid in ids:
-            h = (int(vid) * 2654435761 + 97) % (1 << 32)
-            u = (h + 1) / float((1 << 32) + 1)
-            level_of.append(min(int(-math.log(u) * m_l), 8))
-        adj: list[dict[int, set]] = [
-            {layer: set() for layer in range(lv + 1)} for lv in level_of
-        ]
-        for node, layer, nb in zip(
-            edge_pdf["node_id"], edge_pdf["layer"], edge_pdf["neighbor_id"]
-        ):
-            adj[idx_of[int(node)]][int(layer)].add(idx_of[int(nb)])
-        # sort adjacency ONCE (replaces the per-step sorted() the set
-        # shape paid inside every beam expansion)
-        adj = [
-            {layer: sorted(nbrs) for layer, nbrs in pl.items()} for pl in adj
-        ]
-        # entry = the builder's final entry: highest level, FIRST
-        # inserted among equals (insertion order = ascending vec_id,
-        # and the entry only moves on a STRICTLY higher level)
-        entry, top = None, -1
-        for i in range(n):
-            if level_of[i] > top:
-                entry, top = i, level_of[i]
-        if entry is None:
-            return pd.DataFrame({"query_id": [], "vec_id": []})
-
-        def d_to(qu, i):
-            return round(1.0 - float(unit[i] @ qu), 9)
-
-        def search_layer(qu, dv, eps, ef_, layer):
-            dq = dv.__getitem__ if dv is not None else (lambda x: d_to(qu, x))
-            visited = set(eps)
-            cand = [(dq(e), e) for e in eps]
-            heapq.heapify(cand)
-            res = [(-d, e) for d, e in cand]
-            heapq.heapify(res)
-            while cand:
-                d, c = heapq.heappop(cand)
-                if res and d > -res[0][0]:
-                    break
-                for nb in adj[c].get(layer, ()):
-                    if nb in visited:
-                        continue
-                    visited.add(nb)
-                    dn = dq(nb)
-                    if len(res) < ef_ or dn < -res[0][0]:
-                        heapq.heappush(cand, (dn, nb))
-                        heapq.heappush(res, (-dn, nb))
-                        if len(res) > ef_:
-                            heapq.heappop(res)
-            return sorted(((-d, e) for d, e in res), key=lambda t: (t[0], t[1]))
-
-        out_q, out_v = [], []
-        for qid, qvec in queries:
-            qu = np.asarray(qvec, dtype=np.float64)
-            qn = math.sqrt(float(qu @ qu))
-            qu = qu / max(qn, 1e-12)
-            dv = (
-                np.round(1.0 - np.einsum("ij,j->i", unit, qu), 9).tolist()
-                if n <= FULL_DOT_MAX
-                else None
-            )
-            ep = [entry]
-            for layer in range(top, 0, -1):
-                ep = [search_layer(qu, dv, ep, 1, layer)[0][1]]
-            res = search_layer(qu, dv, ep, ef + 1, 0)
-            taken = 0
-            for _d, e in res:
-                if int(ids[e]) == qid:
-                    continue
-                out_q.append(qid)
-                out_v.append(int(ids[e]))
-                taken += 1
-                if taken >= k:
-                    break
-        return pd.DataFrame({"query_id": out_q, "vec_id": out_v})
+        g = hk.shard(vec_pdf, edge_pdf)
+        q, v = hk.search(g, queries, k, ef, excluded)
+        return pd.DataFrame({"query_id": q, "vec_id": v})
 
     return search_shard
+
+
+def _hnsw_serve(
+    corpus: DataFrame,
+    edges: DataFrame,
+    queries: list,
+    k: int = TOP_K,
+    ef: int = HNSW_EF_SEARCH,
+    excluded: frozenset = frozenset(),
+) -> DataFrame:
+    """Serve ``queries`` from persisted per-shard graphs: the vectors
+    and the edge rows cogroup on shard (one task per shard, the same
+    fan-out as the build) → local (query_id, vec_id) candidates."""
+    fn = _hnsw_search_edges_fn(queries, k, ef, HNSW_M, excluded)
+    return (
+        _sharded(corpus)
+        .cogroup(_sharded(edges))
+        .applyInPandas(fn, "query_id bigint, vec_id bigint")
+    )
 
 
 def knn_hnsw_indexed(
@@ -2250,44 +2264,18 @@ def knn_hnsw_indexed(
     k: int = TOP_K,
     ef_search: int = HNSW_EF_SEARCH,
 ) -> DataFrame:
-    """L3 — HNSW search over the PERSISTED per-shard graphs: the
-    vectors and the index cogroup on shard (one task per shard, the
-    same fan-out as the build), no graph construction at query time.
-    Candidates are re-scored with the exact Catalyst cosine and merged
-    as the global top-k, identical to the fresh-build path."""
-    index_dir = hnsw_index_write(spark, sf_dir)
+    """L3 — HNSW search over the PERSISTED per-shard graphs: no graph
+    construction at query time. Candidates are re-scored with the
+    exact Catalyst cosine and merged as the global top-k, identical to
+    the fresh-build path."""
     import os
 
-    edges = spark.read.parquet(os.path.join(index_dir, "edges"))
+    edges = spark.read.parquet(
+        os.path.join(hnsw_index_write(spark, sf_dir), "edges")
+    )
     emb = spread(load_table(spark, sf_dir, "embeddings"))
-    queries = [
-        (int(r.vec_id), [float(x) for x in r.embedding])
-        for r in emb.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", "embedding")
-        .collect()  # bounded: the N_QUERIES demo query vectors
-    ]
-    corpus = emb.withColumn(
-        "shard", (F.col("vec_id") % HNSW_SHARDS).cast("int")
-    )
-    fn = _hnsw_search_edges_fn(queries, k, ef_search, HNSW_M)
-    cands = (
-        _sharded(corpus)
-        .cogroup(_sharded(edges))
-        .applyInPandas(fn, "query_id bigint, vec_id bigint")
-    )
-    qdf = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q")
-    )
-    sims = (
-        cands.join(emb.select("vec_id", "embedding"), "vec_id")
-        .join(F.broadcast(qdf), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            round2(cosine_similarity("q", "embedding"), 6).alias("sim"),
-        )
-    )
-    return _ranked_topk(sims, k)
+    cands = _hnsw_serve(_with_shard(emb), edges, _demo_queries(emb), k, ef_search)
+    return _ranked_topk(_hnsw_sims(cands, emb), k)
 
 
 def knn_hnsw_indexed_checked(
@@ -2320,130 +2308,18 @@ def _hnsw_insert_fn(m: int, ef_c: int):
     ``is_new``) + the shard's PERSISTED base edges → the updated full
     edge set. The base adjacency is RECONSTRUCTED from the edge rows
     (no base-base distance is ever recomputed); only the inserted
-    nodes run the builder's insert loop — the same rounded distances,
-    deterministic level draw, and overflow pruning as
-    ``_hnsw_candidate_fn`` (tests pin degree bounds + connectivity)."""
+    nodes, new ascending after base ascending, run the kernel's insert
+    loop (tests pin degree bounds + connectivity)."""
+    hk = _hnsw_kernel(m, ef_c)
 
     def insert_shard(vec_pdf, edge_pdf):
-        import heapq
-        import math
-        from bisect import bisect_left
-
         import numpy as np
-        import pandas as pd
 
-        base_pdf = vec_pdf[~vec_pdf["is_new"]]
-        new_pdf = vec_pdf[vec_pdf["is_new"]]
-        base_ids = np.sort(base_pdf["vec_id"].to_numpy())
-        new_ids = np.sort(new_pdf["vec_id"].to_numpy())
-        ids = np.concatenate([base_ids, new_ids])
-        by_id = {
-            int(r.vec_id): r.embedding for r in vec_pdf.itertuples()
-        }
-        vecs = np.stack([np.asarray(by_id[int(v)]) for v in ids]).astype(
-            np.float64
-        )
-        norms = np.sqrt((vecs * vecs).sum(axis=1))
-        unit = vecs / np.maximum(norms, 1e-12)[:, None]
-        idx_of = {int(v): i for i, v in enumerate(ids)}
-        nb, n = len(base_ids), len(ids)
-        FULL_DOT_MAX = 8192  # see _hnsw_candidate_fn (r12 vectorization)
-
-        m_l = 1.0 / math.log(m)
-        level_of = []
-        for vid in ids:
-            h = (int(vid) * 2654435761 + 97) % (1 << 32)
-            u = (h + 1) / float((1 << 32) + 1)
-            level_of.append(min(int(-math.log(u) * m_l), 8))
-        adj: list[dict[int, set]] = [
-            {layer: set() for layer in range(lv + 1)} for lv in level_of
-        ]
-        for node, layer, nbr in zip(
-            edge_pdf["node_id"], edge_pdf["layer"], edge_pdf["neighbor_id"]
-        ):
-            adj[idx_of[int(node)]][int(layer)].add(idx_of[int(nbr)])
-        adj = [
-            {layer: sorted(nbrs) for layer, nbrs in pl.items()} for pl in adj
-        ]
-
-        def d_to(qu, i):
-            return round(1.0 - float(unit[i] @ qu), 9)
-
-        def search_layer(qu, dv, eps, ef_, layer):
-            dq = dv.__getitem__ if dv is not None else (lambda x: d_to(qu, x))
-            visited = set(eps)
-            cand = [(dq(e), e) for e in eps]
-            heapq.heapify(cand)
-            res = [(-d, e) for d, e in cand]
-            heapq.heapify(res)
-            while cand:
-                d, c = heapq.heappop(cand)
-                if res and d > -res[0][0]:
-                    break
-                for nbr in adj[c].get(layer, ()):
-                    if nbr in visited:
-                        continue
-                    visited.add(nbr)
-                    dn = dq(nbr)
-                    if len(res) < ef_ or dn < -res[0][0]:
-                        heapq.heappush(cand, (dn, nbr))
-                        heapq.heappush(res, (-dn, nbr))
-                        if len(res) > ef_:
-                            heapq.heappop(res)
-            return sorted(((-d, e) for d, e in res), key=lambda t: (t[0], t[1]))
-
-        def _insert_sorted(lst, x):
-            p = bisect_left(lst, x)
-            if p == len(lst) or lst[p] != x:
-                lst.insert(p, x)
-
-        # the persisted entry point: highest level, first-inserted
-        # (lowest base index) among equals — matches the builder
-        entry, top = None, -1
-        for i in range(nb):
-            if level_of[i] > top:
-                entry, top = i, level_of[i]
-        for i in range(nb, n):  # the insert loop, ascending vec_id
-            li = level_of[i]
-            if entry is None:
-                entry, top = i, li
-                continue
-            qu = unit[i]
-            dv = (
-                np.round(1.0 - np.einsum("ij,j->i", unit, qu), 9).tolist()
-                if n <= FULL_DOT_MAX
-                else None
-            )
-            ep = [entry]
-            for layer in range(top, li, -1):
-                ep = [search_layer(qu, dv, ep, 1, layer)[0][1]]
-            for layer in range(min(top, li), -1, -1):
-                cands = search_layer(qu, dv, ep, ef_c, layer)
-                mmax = m if layer > 0 else 2 * m
-                for _, e in cands[:m]:
-                    _insert_sorted(adj[i][layer], e)
-                    lst_e = adj[e][layer]
-                    _insert_sorted(lst_e, i)
-                    if len(lst_e) > mmax:
-                        ds = np.round(
-                            1.0 - np.einsum("ij,j->i", unit[lst_e], unit[e]), 9
-                        )
-                        keyed = sorted(zip(ds.tolist(), lst_e))[:mmax]
-                        adj[e][layer] = sorted(x for _, x in keyed)
-                ep = [e for _, e in cands]
-            if li > top:
-                entry, top = i, li
-
-        rows_n, rows_l, rows_nb = [], [], []
-        for i in range(n):
-            for layer, nbrs in adj[i].items():
-                for nbr in nbrs:
-                    rows_n.append(int(ids[i]))
-                    rows_l.append(layer)
-                    rows_nb.append(int(ids[nbr]))
-        return pd.DataFrame(
-            {"node_id": rows_n, "layer": rows_l, "neighbor_id": rows_nb}
-        )
+        is_new = vec_pdf["is_new"].to_numpy()
+        order = np.lexsort((vec_pdf["vec_id"].to_numpy(), is_new))
+        g = hk.shard(vec_pdf, edge_pdf, order)
+        hk.insert(g, len(is_new) - int(is_new.sum()))
+        return hk.edges(g)
 
     return insert_shard
 
@@ -2454,67 +2330,73 @@ def _hnsw_graph_stats_fn(m: int):
     every appended node reachable from the entry point (layer-0 BFS;
     retrievability IS connectivity in a beam-searched graph), and the
     M-bound held through the append's overflow pruning."""
+    hk = _hnsw_kernel(m)
 
     def stats(vec_pdf, edge_pdf):
-        import math
         from collections import deque
 
-        import numpy as np
         import pandas as pd
 
-        ids = np.sort(vec_pdf["vec_id"].to_numpy())
-        is_new = {
-            int(r.vec_id): bool(r.is_new) for r in vec_pdf.itertuples()
-        }
-        idx_of = {int(v): i for i, v in enumerate(ids)}
-        n = len(ids)
-        m_l = 1.0 / math.log(m)
-        level_of = []
-        for vid in ids:
-            h = (int(vid) * 2654435761 + 97) % (1 << 32)
-            u = (h + 1) / float((1 << 32) + 1)
-            level_of.append(min(int(-math.log(u) * m_l), 8))
-        adj0: list[set] = [set() for _ in range(n)]
-        deg_viol = 0
-        per_layer: dict[tuple[int, int], int] = {}
-        for node, layer, nbr in zip(
-            edge_pdf["node_id"], edge_pdf["layer"], edge_pdf["neighbor_id"]
-        ):
-            i, j, la = idx_of[int(node)], idx_of[int(nbr)], int(layer)
-            per_layer[(i, la)] = per_layer.get((i, la), 0) + 1
-            if la == 0:
-                adj0[i].add(j)
-        for (i, la), deg in per_layer.items():
-            if deg > (2 * m if la == 0 else m):
-                deg_viol += 1
-        entry, top = None, -1
-        for i in range(n):
-            if level_of[i] > top:
-                entry, top = i, level_of[i]
-        reach = set()
-        if entry is not None:
-            q = deque([entry])
-            reach.add(entry)
-            while q:
-                c = q.popleft()
-                for nb in adj0[c]:
-                    if nb not in reach:
-                        reach.add(nb)
-                        q.append(nb)
-        n_new = sum(1 for v in ids if is_new[int(v)])
-        new_connected = sum(
-            1 for v in ids if is_new[int(v)] and idx_of[int(v)] in reach
+        g = hk.shard(vec_pdf, edge_pdf)
+        is_new = vec_pdf["is_new"].to_numpy()[g.order].tolist()
+        deg_viol = sum(
+            len(nbrs) > (2 * m if layer == 0 else m)
+            for pl in g.adj
+            for layer, nbrs in pl.items()
         )
+        entry, _ = hk.entry_point(g, len(g.ids))
+        reach, todo = {entry}, deque([entry])
+        while todo:
+            for nb in g.adj[todo.popleft()][0]:
+                if nb not in reach:
+                    reach.add(nb)
+                    todo.append(nb)
         return pd.DataFrame(
             {
-                "n_vectors": [n],
-                "n_new": [n_new],
-                "n_new_connected": [new_connected],
+                "n_vectors": [len(g.ids)],
+                "n_new": [sum(is_new)],
+                "n_new_connected": [sum(is_new[i] for i in reach)],
                 "degree_violations": [deg_viol],
             }
         )
 
     return stats
+
+
+def _hnsw_audit(corpus: DataFrame, edges: DataFrame) -> DataFrame:
+    """Per-shard ``_hnsw_graph_stats_fn`` rows for an ``is_new``-flagged
+    corpus and its edge rows."""
+    return (
+        _sharded(corpus)
+        .cogroup(_sharded(edges))
+        .applyInPandas(
+            _hnsw_graph_stats_fn(HNSW_M),
+            "n_vectors bigint, n_new bigint, n_new_connected bigint, "
+            "degree_violations bigint",
+        )
+    )
+
+
+HNSW_APPEND_RECALL_FLOOR = 0.85  # the fresh-build serving floor
+
+
+def _recall_floor_met(cands: DataFrame, emb: DataFrame, exact: DataFrame) -> DataFrame:
+    """One-row ``recall_floor_met`` flag: the served candidates'
+    re-scored top-k hits at least HNSW_APPEND_RECALL_FLOOR of the
+    exact top-k over ``exact`` (query_id, vec_id, sim) rows."""
+    approx = _ranked_topk(_hnsw_sims(cands, emb), TOP_K).select("query_id", "vec_id")
+    true_k = _ranked_topk(exact, TOP_K).select("query_id", "vec_id")
+    return (
+        approx.join(true_k, ["query_id", "vec_id"], "inner")
+        .agg(F.count("*").alias("hits"))
+        .crossJoin(true_k.agg(F.count("*").alias("total")))
+        .select(
+            (
+                F.col("hits")
+                >= F.lit(HNSW_APPEND_RECALL_FLOOR) * F.col("total")
+            ).alias("recall_floor_met")
+        )
+    )
 
 
 def hnsw_append_stage(spark: SparkSession, sf_dir: str) -> str:
@@ -2527,35 +2409,23 @@ def hnsw_append_stage(spark: SparkSession, sf_dir: str) -> str:
 
     def build(stage: str) -> None:
         emb = spread(load_table(spark, sf_dir, "embeddings"))
-        corpus = emb.withColumn(
-            "shard", (F.col("vec_id") % HNSW_SHARDS).cast("int")
-        ).withColumn("is_new", F.col("vec_id") % 10 == 0)
-        base = corpus.filter(~F.col("is_new"))
-        edges_fn = _hnsw_candidate_fn(
-            [], 0, (), HNSW_M, HNSW_EF_CONSTRUCTION, emit="edges"
-        )
-        base_edges = _sharded(base).applyInPandas(
-            edges_fn, "node_id bigint, layer int, neighbor_id bigint"
-        ).withColumn("shard", (F.col("node_id") % HNSW_SHARDS).cast("int"))
-        base_edges.write.partitionBy("shard").parquet(
-            os.path.join(stage, "edges_base")
-        )
+        corpus = _with_shard(emb).withColumn("is_new", F.col("vec_id") % 10 == 0)
+        _hnsw_edges(corpus.filter(~F.col("is_new"))).write.partitionBy(
+            "shard"
+        ).parquet(os.path.join(stage, "edges_base"))
         persisted = spark.read.parquet(os.path.join(stage, "edges_base"))
         ins = _hnsw_insert_fn(HNSW_M, HNSW_EF_CONSTRUCTION)
-        updated = (
+        updated = _with_shard(
             _sharded(corpus)
             .cogroup(_sharded(persisted))
-            .applyInPandas(ins, "node_id bigint, layer int, neighbor_id bigint")
-            .withColumn("shard", (F.col("node_id") % HNSW_SHARDS).cast("int"))
+            .applyInPandas(ins, HNSW_EDGES_SCHEMA),
+            "node_id",
         )
         updated.write.partitionBy("shard").parquet(
             os.path.join(stage, "edges_v2")
         )
 
     return staged("hnswapp", os.path.join(sf_dir, "embeddings.parquet"), build)
-
-
-HNSW_APPEND_RECALL_FLOOR = 0.85  # the fresh-build serving floor
 
 
 def hnsw_index_append_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2569,68 +2439,20 @@ def hnsw_index_append_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     index_dir = hnsw_append_stage(spark, sf_dir)
     emb = spread(load_table(spark, sf_dir, "embeddings"))
-    corpus = emb.withColumn(
-        "shard", (F.col("vec_id") % HNSW_SHARDS).cast("int")
-    ).withColumn("is_new", F.col("vec_id") % 10 == 0)
+    corpus = _with_shard(emb).withColumn("is_new", F.col("vec_id") % 10 == 0)
     edges = spark.read.parquet(os.path.join(index_dir, "edges_v2"))
-    stats = (
-        _sharded(corpus)
-        .cogroup(_sharded(edges))
-        .applyInPandas(
-            _hnsw_graph_stats_fn(HNSW_M),
-            "n_vectors bigint, n_new bigint, n_new_connected bigint, "
-            "degree_violations bigint",
-        )
-        .agg(
-            F.sum("n_vectors").cast("bigint").alias("nodes_indexed"),
-            F.sum("n_new").cast("bigint").alias("n_batch"),
-            (F.sum("n_new") == F.sum("n_new_connected")).alias(
-                "appended_connected"
-            ),
-            (F.sum("degree_violations") == 0).alias("degree_bounded"),
-        )
+    stats = _hnsw_audit(corpus, edges).agg(
+        F.sum("n_vectors").cast("bigint").alias("nodes_indexed"),
+        F.sum("n_new").cast("bigint").alias("n_batch"),
+        (F.sum("n_new") == F.sum("n_new_connected")).alias(
+            "appended_connected"
+        ),
+        (F.sum("degree_violations") == 0).alias("degree_bounded"),
     )
     # serving recall over the UPDATED persisted graph, vs the exact
     # top-k of the FULL corpus (base + appended)
-    queries = [
-        (int(r.vec_id), [float(x) for x in r.embedding])
-        for r in emb.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", "embedding")
-        .collect()  # bounded: the N_QUERIES demo query vectors
-    ]
-    fn = _hnsw_search_edges_fn(queries, TOP_K, HNSW_EF_SEARCH, HNSW_M)
-    cands = (
-        _sharded(corpus.drop("is_new"))
-        .cogroup(_sharded(edges))
-        .applyInPandas(fn, "query_id bigint, vec_id bigint")
-    )
-    qdf = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q")
-    )
-    sims = (
-        cands.join(emb.select("vec_id", "embedding"), "vec_id")
-        .join(F.broadcast(qdf), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            round2(cosine_similarity("q", "embedding"), 6).alias("sim"),
-        )
-    )
-    approx = _ranked_topk(sims, TOP_K).select("query_id", "vec_id")
-    true_k = _ranked_topk(_all_sims(spark, sf_dir), TOP_K).select(
-        "query_id", "vec_id"
-    )
-    recall = (
-        approx.join(true_k, ["query_id", "vec_id"], "inner")
-        .agg(F.count("*").alias("hits"))
-        .crossJoin(true_k.agg(F.count("*").alias("total")))
-        .select(
-            (
-                F.col("hits")
-                >= F.lit(HNSW_APPEND_RECALL_FLOOR) * F.col("total")
-            ).alias("recall_floor_met")
-        )
-    )
+    cands = _hnsw_serve(corpus.drop("is_new"), edges, _demo_queries(emb))
+    recall = _recall_floor_met(cands, emb, _all_sims(spark, sf_dir))
     truth = emb.agg(F.count("*").cast("bigint").alias("n_corpus"))
     return (
         stats.crossJoin(F.broadcast(truth))
@@ -2659,116 +2481,9 @@ SELECT CAST(count(*) AS BIGINT) AS nodes_indexed,
 FROM embeddings
 """
 
-
 # -- round 11: HNSW delete maintenance (tombstone -> compact) -----------
 
 HNSW_TOMBSTONE_COMPACT = 0.05  # compact a shard past this deleted fraction
-
-
-def _hnsw_search_excluding_fn(
-    queries: list, k: int, ef: int, m: int, excluded: frozenset
-):
-    """The persisted-graph beam search with a TOMBSTONE set: traversal
-    runs THROUGH tombstoned nodes (they are still edges in the graph —
-    removing them from the descent would strand their neighborhoods)
-    but an excluded id is never EMITTED. This is the serve-side
-    semantics between a delete and the compaction that physically
-    removes the node."""
-
-    def search_shard(vec_pdf, edge_pdf):
-        import heapq
-        import math
-
-        import numpy as np
-        import pandas as pd
-
-        ids = vec_pdf["vec_id"].to_numpy()
-        order = np.argsort(ids)
-        ids = ids[order]
-        vecs = np.stack(vec_pdf["embedding"].to_numpy())[order].astype(
-            np.float64
-        )
-        norms = np.sqrt((vecs * vecs).sum(axis=1))
-        unit = vecs / np.maximum(norms, 1e-12)[:, None]
-        n = len(ids)
-        idx_of = {int(v): i for i, v in enumerate(ids)}
-        m_l = 1.0 / math.log(m)
-        level_of = []
-        for vid in ids:
-            h = (int(vid) * 2654435761 + 97) % (1 << 32)
-            u = (h + 1) / float((1 << 32) + 1)
-            level_of.append(min(int(-math.log(u) * m_l), 8))
-        adj: list[dict[int, set]] = [
-            {layer: set() for layer in range(lv + 1)} for lv in level_of
-        ]
-        for node, layer, nb in zip(
-            edge_pdf["node_id"], edge_pdf["layer"], edge_pdf["neighbor_id"]
-        ):
-            adj[idx_of[int(node)]][int(layer)].add(idx_of[int(nb)])
-        adj = [
-            {layer: sorted(nbrs) for layer, nbrs in pl.items()} for pl in adj
-        ]
-        entry, top = None, -1
-        for i in range(n):
-            if level_of[i] > top:
-                entry, top = i, level_of[i]
-        if entry is None:
-            return pd.DataFrame({"query_id": [], "vec_id": []})
-        FULL_DOT_MAX = 8192  # see _hnsw_candidate_fn (r12 vectorization)
-
-        def d_to(qu, i):
-            return round(1.0 - float(unit[i] @ qu), 9)
-
-        def search_layer(qu, dv, eps, ef_, layer):
-            dq = dv.__getitem__ if dv is not None else (lambda x: d_to(qu, x))
-            visited = set(eps)
-            cand = [(dq(e), e) for e in eps]
-            heapq.heapify(cand)
-            res = [(-d, e) for d, e in cand]
-            heapq.heapify(res)
-            while cand:
-                d, c = heapq.heappop(cand)
-                if res and d > -res[0][0]:
-                    break
-                for nb in adj[c].get(layer, ()):
-                    if nb in visited:
-                        continue
-                    visited.add(nb)
-                    dn = dq(nb)
-                    if len(res) < ef_ or dn < -res[0][0]:
-                        heapq.heappush(cand, (dn, nb))
-                        heapq.heappush(res, (-dn, nb))
-                        if len(res) > ef_:
-                            heapq.heappop(res)
-            return sorted(((-d, e) for d, e in res), key=lambda t: (t[0], t[1]))
-
-        out_q, out_v = [], []
-        for qid, qvec in queries:
-            qu = np.asarray(qvec, dtype=np.float64)
-            qn = math.sqrt(float(qu @ qu))
-            qu = qu / max(qn, 1e-12)
-            dv = (
-                np.round(1.0 - np.einsum("ij,j->i", unit, qu), 9).tolist()
-                if n <= FULL_DOT_MAX
-                else None
-            )
-            ep = [entry]
-            for layer in range(top, 0, -1):
-                ep = [search_layer(qu, dv, ep, 1, layer)[0][1]]
-            res = search_layer(qu, dv, ep, ef + 1, 0)
-            taken = 0
-            for _d, e in res:
-                vid = int(ids[e])
-                if vid == qid or vid in excluded:
-                    continue  # tombstones traversed, never returned
-                out_q.append(qid)
-                out_v.append(vid)
-                taken += 1
-                if taken >= k:
-                    break
-        return pd.DataFrame({"query_id": out_q, "vec_id": out_v})
-
-    return search_shard
 
 
 def _hnsw_compact_fn(m: int):
@@ -2778,88 +2493,42 @@ def _hnsw_compact_fn(m: int):
     neighbors are re-linked pairwise (the standard one-hop repair:
     the hole d leaves is bridged by its own neighborhood), then every
     survivor's list drops deleted targets and re-prunes to the M
-    bound by the builder's rule (closest first, rounded distance,
-    tie on id) — so the output graph is self-contained (zero edges
-    into deleted nodes) and degree-bounded."""
+    bound by the kernel's prune (closest first, rounded distance, tie
+    on id) — so the output graph is self-contained (zero edges into
+    deleted nodes) and degree-bounded."""
+    hk = _hnsw_kernel(m)
 
     def compact_shard(vec_pdf, edge_pdf):
-        import math
-
-        import numpy as np
-        import pandas as pd
-
-        ids = vec_pdf["vec_id"].to_numpy()
-        order = np.argsort(ids)
-        ids = ids[order]
-        vecs = np.stack(vec_pdf["embedding"].to_numpy())[order].astype(
-            np.float64
-        )
-        deleted_flags = vec_pdf["is_deleted"].to_numpy()[order]
-        norms = np.sqrt((vecs * vecs).sum(axis=1))
-        unit = vecs / np.maximum(norms, 1e-12)[:, None]
-        idx_of = {int(v): i for i, v in enumerate(ids)}
-        is_del = [bool(x) for x in deleted_flags]
-
-        adj: dict[int, dict[int, set]] = {}
-        for node, layer, nb in zip(
-            edge_pdf["node_id"], edge_pdf["layer"], edge_pdf["neighbor_id"]
-        ):
-            adj.setdefault(idx_of[int(node)], {}).setdefault(
-                int(layer), set()
-            ).add(idx_of[int(nb)])
-
-        layers = sorted({la for pl in adj.values() for la in pl})
-        for la in layers:
+        g = hk.shard(vec_pdf, edge_pdf)
+        is_del = vec_pdf["is_deleted"].to_numpy()[g.order].tolist()
+        adj = g.adj
+        for la in range(max(g.level) + 1):
             # bridge every deleted node's surviving neighborhood
-            for d, pl in adj.items():
+            for d, pl in enumerate(adj):
                 if not is_del[d] or la not in pl:
                     continue
-                surv = sorted(u for u in pl[la] if not is_del[u])
+                surv = [u for u in pl[la] if not is_del[u]]
                 for a in surv:
                     for b in surv:
                         if a != b:
-                            adj.setdefault(a, {}).setdefault(la, set()).add(b)
-                            adj.setdefault(b, {}).setdefault(la, set()).add(a)
+                            hk.insert_sorted(adj[a][la], b)
             # drop deleted targets, re-prune to the M bound
             mmax = 2 * m if la == 0 else m
-            for u, pl in adj.items():
+            for u, pl in enumerate(adj):
                 if is_del[u] or la not in pl:
                     continue
-                keep = {x for x in pl[la] if not is_del[x]}
-                if len(keep) > mmax:
-                    # r12: one einsum for the prune batch instead of a
-                    # numpy dot per key call (rounded values pinned
-                    # equal to the scalar path by test)
-                    klist = sorted(keep)
-                    ds = np.round(
-                        1.0 - np.einsum("ij,j->i", unit[klist], unit[u]), 9
-                    )
-                    keep = set(
-                        x for _, x in sorted(zip(ds.tolist(), klist))[:mmax]
-                    )
-                pl[la] = keep
-
-        rows_n, rows_l, rows_nb = [], [], []
-        for u in sorted(adj):
-            if is_del[u]:
-                continue
-            for la, nbrs in adj[u].items():
-                for nb in sorted(nbrs):
-                    rows_n.append(int(ids[u]))
-                    rows_l.append(la)
-                    rows_nb.append(int(ids[nb]))
-        return pd.DataFrame(
-            {"node_id": rows_n, "layer": rows_l, "neighbor_id": rows_nb}
-        )
+                keep = [x for x in pl[la] if not is_del[x]]
+                pl[la] = hk.prune(g, u, keep, mmax) if len(keep) > mmax else keep
+        return hk.edges(g, keep=[not x for x in is_del])
 
     return compact_shard
 
 
 def hnsw_delete_stage(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the delete lifecycle once per process per corpus
+    """Stage the delete lifecycle over ``hnsw_index_write``'s persisted
+    full-corpus graphs (its ``edges``), once per process per corpus
     fingerprint (``staging.staged``):
 
-    - ``edges_base``: the full-corpus per-shard graphs, persisted;
     - ``tombstones_v1`` (``vec_id % 34 == 3``, ~2.9%/shard): BELOW the
       compaction threshold everywhere — serving excludes them, the
       graph is untouched;
@@ -2875,18 +2544,7 @@ def hnsw_delete_stage(spark: SparkSession, sf_dir: str) -> str:
 
     def build(stage: str) -> None:
         emb = spread(load_table(spark, sf_dir, "embeddings"))
-        corpus = emb.withColumn(
-            "shard", (F.col("vec_id") % HNSW_SHARDS).cast("int")
-        )
-        edges_fn = _hnsw_candidate_fn(
-            [], 0, (), HNSW_M, HNSW_EF_CONSTRUCTION, emit="edges"
-        )
-        base_edges = _sharded(corpus).applyInPandas(
-            edges_fn, "node_id bigint, layer int, neighbor_id bigint"
-        ).withColumn("shard", (F.col("node_id") % HNSW_SHARDS).cast("int"))
-        base_edges.write.partitionBy("shard").parquet(
-            os.path.join(stage, "edges_base")
-        )
+        corpus = _with_shard(emb)
         for name, modulus in (("tombstones_v1", 34), ("tombstones_v2", 17)):
             corpus.filter(F.col("vec_id") % modulus == 3).select(
                 "vec_id", "shard"
@@ -2912,23 +2570,22 @@ def hnsw_delete_stage(spark: SparkSession, sf_dir: str) -> str:
                 {"fractions": fractions, "compacted": compact_shards}, f,
                 sort_keys=True,
             )
-        persisted = spark.read.parquet(os.path.join(stage, "edges_base"))
+        persisted = spark.read.parquet(
+            os.path.join(hnsw_index_write(spark, sf_dir), "edges")
+        )
         flagged = corpus.withColumn(
             "is_deleted", F.col("vec_id") % 17 == 3
         )
         to_compact = flagged.filter(F.col("shard").isin(compact_shards))
-        compacted = (
+        compacted = _with_shard(
             _sharded(to_compact)
             .cogroup(
                 _sharded(persisted.filter(
                     F.col("shard").isin(compact_shards)
                 ))
             )
-            .applyInPandas(
-                _hnsw_compact_fn(HNSW_M),
-                "node_id bigint, layer int, neighbor_id bigint",
-            )
-            .withColumn("shard", (F.col("node_id") % HNSW_SHARDS).cast("int"))
+            .applyInPandas(_hnsw_compact_fn(HNSW_M), HNSW_EDGES_SCHEMA),
+            "node_id",
         )
         kept = persisted.filter(~F.col("shard").isin(compact_shards)).select(
             "node_id", "layer", "neighbor_id", "shard"
@@ -2965,15 +2622,8 @@ def hnsw_index_delete_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     with open(os.path.join(index_dir, "compaction.json")) as f:
         decision = _json.load(f)
     emb = spread(load_table(spark, sf_dir, "embeddings"))
-    corpus = emb.withColumn(
-        "shard", (F.col("vec_id") % HNSW_SHARDS).cast("int")
-    )
-    queries = [
-        (int(r.vec_id), [float(x) for x in r.embedding])
-        for r in emb.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", "embedding")
-        .collect()  # bounded: the N_QUERIES demo query vectors
-    ]
+    corpus = _with_shard(emb)
+    queries = _demo_queries(emb)
     v1_ids = frozenset(
         int(r.vec_id)
         for r in spark.read.parquet(
@@ -2981,24 +2631,17 @@ def hnsw_index_delete_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).collect()  # bounded: ~n/34 tombstones at the demo scale;
         # production keeps this as a broadcast join, not a driver set
     )
-    base_edges = spark.read.parquet(os.path.join(index_dir, "edges_base"))
-    serve_v1 = (
-        _sharded(corpus)
-        .cogroup(_sharded(base_edges))
-        .applyInPandas(
-            _hnsw_search_excluding_fn(
-                queries, TOP_K, HNSW_EF_SEARCH, HNSW_M, v1_ids
-            ),
-            "query_id bigint, vec_id bigint",
-        )
+    base_edges = spark.read.parquet(
+        os.path.join(hnsw_index_write(spark, sf_dir), "edges")
     )
+    serve_v1 = _hnsw_serve(corpus, base_edges, queries, excluded=v1_ids)
     v1_clean = serve_v1.agg(
         (
             F.sum((F.col("vec_id") % 34 == 3).cast("int")) == 0
         ).alias("tombstone_serve_clean")
     )
-    # post-compaction: survivors only, the STANDARD search fn — a
-    # single dangling edge into a deleted node would KeyError the scan
+    # post-compaction: survivors only, no tombstone set — a single
+    # dangling edge into a deleted node would KeyError the scan
     survivors = corpus.filter(F.col("vec_id") % 17 != 3)
     cedges = spark.read.parquet(os.path.join(index_dir, "edges_compacted"))
     deleted = corpus.filter(F.col("vec_id") % 17 == 3).select(
@@ -3016,65 +2659,24 @@ def hnsw_index_delete_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reachability + degree via the append audit body: flagging every
     # survivor "new" makes its new-connected count a full layer-0 BFS
     # coverage check of the compacted graph
-    reach = (
-        _sharded(survivors.withColumn("is_new", F.lit(True)))
-        .cogroup(_sharded(cedges))
-        .applyInPandas(
-            _hnsw_graph_stats_fn(HNSW_M),
-            "n_vectors bigint, n_new bigint, n_new_connected bigint, "
-            "degree_violations bigint",
-        )
-        .agg(
-            (F.sum("n_new") == F.sum("n_new_connected")).alias(
-                "survivors_reachable"
-            ),
-            (F.sum("degree_violations") == 0).alias("degree_bounded"),
-            F.sum("n_vectors").cast("bigint").alias("n_survivor_nodes"),
-        )
+    reach = _hnsw_audit(survivors.withColumn("is_new", F.lit(True)), cedges).agg(
+        (F.sum("n_new") == F.sum("n_new_connected")).alias(
+            "survivors_reachable"
+        ),
+        (F.sum("degree_violations") == 0).alias("degree_bounded"),
+        F.sum("n_vectors").cast("bigint").alias("n_survivor_nodes"),
     )
-    serve_v2 = (
-        _sharded(survivors)
-        .cogroup(_sharded(cedges))
-        .applyInPandas(
-            _hnsw_search_edges_fn(queries, TOP_K, HNSW_EF_SEARCH, HNSW_M),
-            "query_id bigint, vec_id bigint",
-        )
-        # two consumers (the deleted-id flag and the recall sims) —
-        # materialize the ≤ n_queries×k candidate rows once so the
-        # survivor beam-search cogroup runs once, not twice (r11)
-        .localCheckpoint()
-    )
+    # two consumers (the deleted-id flag and the recall sims) —
+    # materialize the ≤ n_queries×k candidate rows once so the
+    # survivor beam-search cogroup runs once, not twice (r11)
+    serve_v2 = _hnsw_serve(survivors, cedges, queries).localCheckpoint()
     clean_v2 = serve_v2.agg(
         (F.sum((F.col("vec_id") % 17 == 3).cast("int")) == 0).alias(
             "deleted_never_returned"
         )
     )
-    qdf = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q")
-    )
-    sims = (
-        serve_v2.join(emb.select("vec_id", "embedding"), "vec_id")
-        .join(F.broadcast(qdf), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            round2(cosine_similarity("q", "embedding"), 6).alias("sim"),
-        )
-    )
-    approx = _ranked_topk(sims, TOP_K).select("query_id", "vec_id")
-    true_k = _ranked_topk(
-        _all_sims(spark, sf_dir).filter(F.col("vec_id") % 17 != 3), TOP_K
-    ).select("query_id", "vec_id")
-    recall = (
-        approx.join(true_k, ["query_id", "vec_id"], "inner")
-        .agg(F.count("*").alias("hits"))
-        .crossJoin(true_k.agg(F.count("*").alias("total")))
-        .select(
-            (
-                F.col("hits")
-                >= F.lit(HNSW_APPEND_RECALL_FLOOR) * F.col("total")
-            ).alias("recall_floor_met")
-        )
+    recall = _recall_floor_met(
+        serve_v2, emb, _all_sims(spark, sf_dir).filter(F.col("vec_id") % 17 != 3)
     )
     counts = emb.agg(
         F.count("*").cast("bigint").alias("n_corpus"),

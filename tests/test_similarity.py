@@ -761,7 +761,7 @@ def test_hnsw_compaction_is_not_vacuous(spark, sf_dir):
     from pyspark.sql import functions as F
 
     index_dir = similarity.hnsw_delete_stage(spark, sf_dir)
-    base = spark.read.parquet(os.path.join(index_dir, "edges_base"))
+    base = spark.read.parquet(os.path.join(similarity.hnsw_index_write(spark, sf_dir), "edges"))
     compacted = spark.read.parquet(
         os.path.join(index_dir, "edges_compacted")
     )

@@ -23,7 +23,6 @@ from __future__ import annotations
 import argparse
 import os
 import sys
-import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -32,15 +31,18 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
-    ap.add_argument("--cpus", default="32")
+    ap.add_argument("--cpus", default=str(len(os.sched_getaffinity(0))))
     ap.add_argument("names", nargs="*", help="subset of queries() to replay")
     args = ap.parse_args()
 
     # Foreign cwd FIRST, before any Spark context exists, so executor
     # python workers inherit a directory the package is NOT importable
-    # from — the exact failure surface the driver exposes.
-    os.chdir(tempfile.mkdtemp(prefix="rtba_driver_sweep_"))
+    # from — the exact failure surface the driver exposes. The dir is
+    # under the staging root, removed when this process exits.
     sys.path.insert(0, REPO)
+    from real_time_big_data_analytics_spark.sources.staging import scratch_dir
+
+    os.chdir(scratch_dir("rtba_driver_sweep_"))
 
     from pyspark.sql import SparkSession
 
